@@ -591,6 +591,9 @@ object Dedup {
     * near-identical boilerplate — and would otherwise produce a
     * quadratic hot key; at 100 TB this is the difference between a
     * bounded shuffle and a stuck executor).
+    *
+    * Verify: the band-mate pairs join straight back to the one cached
+    * shingle projection for both sets, in one chain ([[lshVerify]]).
     */
   def minhashNearDups(
       df: DataFrame,
@@ -601,62 +604,58 @@ object Dedup {
       bands: Int = 8,
       threshold: Double = 0.6,
       maxBucket: Int = 1000): DataFrame = {
-    val rows = k / bands
     // document -> shingle array -> signature -> band keys is all
     // per-row native expressions: ZERO shuffles before banding (the
     // declarative formulation spent three — explode window, distinct,
-    // and a k-way min aggregate)
-    val withSh = shingleArrays(df, id, text, nShingle)
-      .where(size(col("sh")) > 0)
-      .persist()
-    // materialize the cache EAGERLY: the self-join's two sides race to
-    // compute uncached partitions concurrently, doing the shingle work
-    // twice (and spamming Block-already-exists warnings); one count
-    // job up front makes every consumer a cache read
-    withSh.count()
-    // consumed by the hot-bucket count and both join sides WITHOUT a
-    // persist: the banding projection pipelines from the cached
-    // shingle arrays, and recomputing the native signature expression
-    // per consumer measures cheaper than materializing + re-reading
-    // the exploded (doc, band) rows from the block cache
-    val banded = withSh.select(col("doc_id"),
-      explode(graft.functions.MinHash.lshBandKeys(
-        graft.functions.MinHash.minhashSig(col("sh"), k), bands, rows)).as("band"))
+    // and a k-way min aggregate). The signature is not cached: the
+    // band keys pipeline from the cached shingle arrays, and
+    // recomputing the native signature expression per consumer
+    // measures cheaper than materializing + re-reading the exploded
+    // (doc, band) rows from the block cache
+    val withSh = shingleArrays(df, id, text, nShingle).where(size(col("sh")) > 0)
+    lshVerify(withSh, graft.functions.MinHash.lshBandKeys(
+      graft.functions.MinHash.minhashSig(col("sh"), k), bands, k / bands), threshold, maxBucket)
+  }
 
+  /** The band → candidate → verify tail of both MinHash-LSH operators.
+    * `withSh` is the per-doc projection (doc_id, sh, …) and `bandKeys`
+    * an array of band keys computed from its columns.
+    *
+    * A frame read more than once inside one action must be
+    * materialized eagerly or not persisted at all: a lazily persisted
+    * frame is built concurrently by every stage that reads it, so the
+    * cache saves nothing and the duplicate builds cost jobs and tasks.
+    * Hence `withSh` is persisted AND counted up front — every read
+    * below (the hot-bucket count, both self-join sides, both verify
+    * joins) is then a cache read. The band-mate pairs are NOT
+    * persisted: their single consumer is the verify join chain, so
+    * they pipeline through it. Only the result stays cached.
+    */
+  private def lshVerify(withSh: DataFrame, bandKeys: Column, threshold: Double,
+      maxBucket: Int): DataFrame = {
+    withSh.persist().count()
+    val banded = withSh.select(col("doc_id"), explode(bandKeys).as("band"))
     // skew guard as a broadcast ANTI-join against the hot buckets:
     // only degenerate buckets exceed maxBucket, so the hot list is
     // tiny by definition and the banded rows themselves never shuffle
-    // for the guard (the previous Window.partitionBy count shuffled
-    // every (doc, band) row; the count aggregate partial-combines to
-    // band keys only)
+    // for the guard (the count aggregate partial-combines to band keys)
     val hot = banded.groupBy("band")
       .agg(count(lit(1)).as("bucket_n"))
       .where(col("bucket_n") > maxBucket)
       .select("band")
     val small = banded.join(broadcast(hot), Seq("band"), "left_anti")
-
-    // consumed three times below (candIds + both set joins): persist,
-    // or the whole signature+band+join chain re-executes per consumer
-    val candidates = small.select(col("band"), col("doc_id").as("id_a"))
+    val pairs = small.select(col("band"), col("doc_id").as("id_a"))
       .join(small.select(col("band"), col("doc_id").as("id_b")), Seq("band"))
       .where(col("id_a") < col("id_b"))
       .select("id_a", "id_b")
       .distinct()
-      .persist()
-
-    // exact-verify only the (few) candidates: the shingle arrays are
-    // already materialized per doc — no re-aggregation, just two joins
-    val candIds = candidates.select(col("id_a").as("doc_id"))
-      .union(candidates.select(col("id_b")))
-      .distinct()
-    val sets = withSh.join(candIds, "doc_id")
-    val result = candidates
-      .join(sets.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(sets.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
+    val result = pairs
+      .join(withSh.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
+      .join(withSh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
         jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
       .where(col("jaccard") >= threshold)
-    materializeAndRelease(result, withSh, candidates)
+    materializeAndRelease(result, withSh)
   }
 
   /** Exact Jaccard similarity of two SET-valued arrays (elements
@@ -792,6 +791,9 @@ object Dedup {
     * unless it is a true near-dup anyway. This is what makes the
     * operator end-to-end oracle-checkable (q21), and what a persisted
     * signature release needs anyway.
+    *
+    * Verify: the same one-chain join of band-mate pairs to the cached
+    * (doc_id, sh, sig) projection as [[minhashNearDups]] ([[lshVerify]]).
     */
   def minhashNearDupsPortable(
       df: DataFrame,
@@ -802,7 +804,6 @@ object Dedup {
       bands: Int = 8,
       threshold: Double = 0.4,
       maxBucket: Int = 1000): DataFrame = {
-    val rows = k / bands
     // one native pass over the text computes BOTH the (xxhash64)
     // shingle sets for the exact-jaccard verify and the portable md5
     // signature — the verify jaccard over hashed shingle sets equals
@@ -813,37 +814,13 @@ object Dedup {
         graft.functions.MinHash.shingleHashes(text, nShingle).as("sh"),
         graft.functions.MinHash.portableMinhashSig(text, nShingle, k).as("sig"))
       .where(size(col("sh")) > 0)
-      .persist()
-    withSh.count()
     // band keys: xxhash64 of the rendered signature slice — bucket
     // EQUALITY is what must match the oracle's slice-equality join,
     // and hash(slice) equality coincides with slice equality up to
     // 2^-64 collisions (which the exact verify then discards unless
     // the pair is also above threshold)
-    val banded = withSh.select(col("doc_id"),
-      explode(graft.functions.MinHash.lshBandKeys(col("sig"), bands, rows)).as("band"))
-    val hot = banded.groupBy("band")
-      .agg(count(lit(1)).as("bucket_n"))
-      .where(col("bucket_n") > maxBucket)
-      .select("band")
-    val small = banded.join(broadcast(hot), Seq("band"), "left_anti")
-    val candidates = small.select(col("band"), col("doc_id").as("id_a"))
-      .join(small.select(col("band"), col("doc_id").as("id_b")), Seq("band"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
-      .persist()
-    val candIds = candidates.select(col("id_a").as("doc_id"))
-      .union(candidates.select(col("id_b")))
-      .distinct()
-    val sets = withSh.join(candIds, "doc_id")
-    val result = candidates
-      .join(sets.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(sets.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
-      .where(col("jaccard") >= threshold)
-    materializeAndRelease(result, withSh, candidates)
+    lshVerify(withSh, graft.functions.MinHash.lshBandKeys(col("sig"), bands, k / bands),
+      threshold, maxBucket)
   }
 
   /** Portable 60-bit SimHash: per token-occurrence, [[portableHash60]]

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 
@@ -467,6 +468,123 @@ class DedupSpec extends SparkTestBase {
     assert(found.subsetOf(exactAbove), s"unverified pair leaked: ${found -- exactAbove}")
     val recall = exactHigh.count(found.contains).toDouble / exactHigh.size
     assert(recall >= 0.8, s"LSH recall $recall below 0.8")
+  }
+
+  // The verify tail both MinHash-LSH operators had before they shared
+  // one pipelined chain: persisted candidate pairs, read three times
+  // (the id union for a semi-join of the shingle sets, then both set
+  // joins). Kept as the reference the single-chain form must equal row
+  // for row.
+  private def threeJoinVerify(withSh: org.apache.spark.sql.DataFrame, bandKeys: Column,
+      threshold: Double, maxBucket: Int): Seq[(Long, Long, Double)] = {
+    import spark.implicits._
+    val cached = withSh.persist()
+    cached.count()
+    val banded = cached.select(col("doc_id"), explode(bandKeys).as("band"))
+    val hot = banded.groupBy("band").agg(count(lit(1)).as("bucket_n"))
+      .where(col("bucket_n") > maxBucket).select("band")
+    val small = banded.join(broadcast(hot), Seq("band"), "left_anti")
+    val candidates = small.select(col("band"), col("doc_id").as("id_a"))
+      .join(small.select(col("band"), col("doc_id").as("id_b")), Seq("band"))
+      .where(col("id_a") < col("id_b"))
+      .select("id_a", "id_b")
+      .distinct()
+      .persist()
+    val candIds = candidates.select(col("id_a").as("doc_id"))
+      .union(candidates.select(col("id_b")))
+      .distinct()
+    val sets = cached.join(candIds, "doc_id")
+    val out = candidates
+      .join(sets.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
+      .join(sets.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
+      .select(col("id_a"), col("id_b"), Dedup.jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
+      .where(col("jaccard") >= threshold)
+      .as[(Long, Long, Double)].collect().toSeq.sorted
+    candidates.unpersist()
+    cached.unpersist()
+    out
+  }
+
+  test("minhash-LSH verify: both variants equal the three-join reference row for row") {
+    import spark.implicits._
+    // 0/1: exact copies (jaccard 1.0); 2/3: 3-gram sets {abc,bcd,cde}
+    // and {abc,bcd,cdx}, jaccard exactly 0.5 = the threshold; 10..15:
+    // six identical boilerplate docs, which every band puts in one
+    // bucket of 6 > maxBucket 4; 20/21: empty and whitespace-only
+    val fixed = Seq(
+      (0L, "north wind carries the smell of rain over dry hills"),
+      (1L, "north wind carries the smell of rain over dry hills"),
+      (2L, "qa qb qc qd qe"),
+      (3L, "qa qb qc qd qx"),
+      (20L, ""),
+      (21L, " \t  \n ")) ++
+      (10L to 15L).map(i => (i, "standard footer text repeated on every single page"))
+    val df = (fixed ++ seededCorpus(nBase = 30, vocab = 200, docLen = 20, seed = 5L)
+      .map { case (i, t) => (i + 100, t) }).toDF("doc_id", "text")
+    val (k, bands, threshold) = (32, 32, 0.5)
+    val variants = Seq(
+      "minhashNearDups" -> ((mb: Int) =>
+        Dedup.minhashNearDups(df, col("doc_id"), col("text"), k = k, bands = bands,
+          threshold = threshold, maxBucket = mb)),
+      "minhashNearDupsPortable" -> ((mb: Int) =>
+        Dedup.minhashNearDupsPortable(df, col("doc_id"), col("text"), k = k, bands = bands,
+          threshold = threshold, maxBucket = mb)))
+    val xxSh = Dedup.shingleArrays(df, col("doc_id"), col("text"), 3).where(size(col("sh")) > 0)
+    val portableSh = df.select(col("doc_id"),
+        graft.functions.MinHash.shingleHashes(col("text"), 3).as("sh"),
+        graft.functions.MinHash.portableMinhashSig(col("text"), 3, k).as("sig"))
+      .where(size(col("sh")) > 0)
+    val references = Map(
+      "minhashNearDups" -> ((mb: Int) => threeJoinVerify(xxSh, graft.functions.MinHash.lshBandKeys(
+        graft.functions.MinHash.minhashSig(col("sh"), k), bands, k / bands), threshold, mb)),
+      "minhashNearDupsPortable" -> ((mb: Int) => threeJoinVerify(portableSh,
+        graft.functions.MinHash.lshBandKeys(col("sig"), bands, k / bands), threshold, mb)))
+    for ((name, run) <- variants; maxBucket <- Seq(4, 1000)) {
+      val res = run(maxBucket)
+      val got = res.as[(Long, Long, Double)].collect().toSeq.sorted
+      res.unpersist()
+      assert(got == references(name)(maxBucket), s"$name, maxBucket $maxBucket")
+      val byPair = got.map(r => (r._1, r._2) -> r._3).toMap
+      assert(byPair.get((0L, 1L)).contains(1.0), s"$name: exact copies")
+      assert(byPair.get((2L, 3L)).contains(0.5), s"$name: pair at the threshold")
+      assert(!got.exists(r => Set(20L, 21L)(r._1) || Set(20L, 21L)(r._2)), s"$name: blank docs")
+      val boiler = got.count(r => r._1 >= 10L && r._2 <= 15L)
+      // the guard drops every bucket of the boilerplate docs at 4, none at 1000
+      assert(boiler == (if (maxBucket == 4) 0 else 15), s"$name, maxBucket $maxBucket: $boiler")
+    }
+  }
+
+  private def cachedEntries: Int = org.apache.spark.sql.CacheEntries(spark)
+
+  test("near-dup operators leave exactly one cache entry, the result, which unpersist frees") {
+    import spark.implicits._
+    val text = seededCorpus(nBase = 20, vocab = 60, docLen = 15, seed = 11L)
+      .toDF("doc_id", "text")
+      .withColumn("lang", lit("en"))
+      .withColumn("n_chars", length(col("text")))
+    val vecs = Seq(
+      (0L, Seq(1.0f, 0.0f)), (1L, Seq(0.0f, 1.0f)), (2L, Seq(0.99f, 0.01f)),
+      (3L, Seq(0.01f, 0.99f)), (4L, Seq(-1.0f, 0.0f))).toDF("doc_id", "vec")
+    val ops = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "minhashNearDups" -> (() => Dedup.minhashNearDups(text, col("doc_id"), col("text"))),
+      "minhashNearDupsPortable" -> (() =>
+        Dedup.minhashNearDupsPortable(text, col("doc_id"), col("text"))),
+      "simhashNearDups" -> (() => Dedup.simhashNearDups(text, col("doc_id"), col("text"))),
+      "simhashNearDupsPortable" -> (() =>
+        Dedup.simhashNearDupsPortable(text, col("doc_id"), col("text"))),
+      "embeddingNearDups" -> (() =>
+        Dedup.embeddingNearDups(vecs, col("doc_id"), col("vec"), threshold = 0.9, nBuckets = 2)),
+      "ngramJaccardNearDups" -> (() => Dedup.ngramJaccardNearDups(text, col("doc_id"),
+        col("text"), col("lang"), col("n_chars"), maxShingleFreq = 3)))
+    for ((name, op) <- ops) {
+      val before = cachedEntries
+      val out = op()
+      assert(cachedEntries == before + 1, s"$name: cache entries ${before} -> $cachedEntries")
+      assert(out.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        s"$name: the new entry is not the returned result")
+      out.unpersist()
+      assert(cachedEntries == before, s"$name: unpersist left $cachedEntries of $before entries")
+    }
   }
 
   test("jaccard: exact on known sets") {
