@@ -1,36 +1,29 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE ON — Spark's production default (3.2+), and the posture
-      // every operator is designed for at scale (runtime re-planning,
-      // skew joins, partition coalescing). The r17 mid-build state
-      // briefly defaulted it OFF for the bench session because the
-      // iterative graph loops then ran their skinny per-round shuffles
-      // at the session constant and AQE's per-exchange sub-job
-      // scheduling dominated; those operators now size their own
-      // partitioning AND scope AQE off around their eager round loops
-      // (Graph.withParts, Profiling's quantile kernels), so the
-      // session default returns to the production setting. Full-run
-      // A/B on this code (2026-08-18): 145.9 s AQE-off vs 139.6 s
-      // AQE-on — the broad mid-tail coalescing pays more than the
-      // handful of loop regressions cost, and the loops are now
-      // individually scoped anyway. Every operator is AQE-agnostic
-      // in VALUES (the oracle-checked Verify path runs Spark
-      // defaults); the env override keeps the harness A/B-able.
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftExtensions.register(spark)
+    val spark = Session.build(s"local[$cpus]", cpus.toInt)
+    // AQE ON — Spark's production default (3.2+), and the posture
+    // every operator is designed for at scale (runtime re-planning,
+    // skew joins, partition coalescing). The r17 mid-build state
+    // briefly defaulted it OFF for the bench session because the
+    // iterative graph loops then ran their skinny per-round shuffles
+    // at the session constant and AQE's per-exchange sub-job
+    // scheduling dominated; those operators now size their own
+    // partitioning AND scope AQE off around their eager round loops
+    // (Graph.withParts, Profiling's quantile kernels), so the
+    // session default returns to the production setting. Full-run
+    // A/B on this code (2026-08-18): 145.9 s AQE-off vs 139.6 s
+    // AQE-on — the broad mid-tail coalescing pays more than the
+    // handful of loop regressions cost, and the loops are now
+    // individually scoped anyway. Every operator is AQE-agnostic
+    // in VALUES (the oracle-checked Verify path runs Spark
+    // defaults); the env override keeps the harness A/B-able. It is a
+    // runtime conf on this session, so scoped children that do not set
+    // AQE themselves start from Spark's default (on).
+    spark.conf.set("spark.sql.adaptive.enabled",
+      sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
     // session warmup (codegen, parquet footer reads, shuffle machinery)
     // otherwise lands on whichever query happens to run first and
     // distorts its timing by several seconds

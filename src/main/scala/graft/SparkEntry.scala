@@ -17,10 +17,10 @@ object SparkEntry {
 
   // events.ts has shipped in two fixture vintages: INT64
   // TIMESTAMP(NANOS) — readable only under
-  // spark.sql.legacy.parquet.nanosAsLong=true (set at SESSION BUILD in
-  // Verify/Bench/dev mains and SparkTestBase, never mutated here: a
-  // conf.set inside a query builder is a global side effect on a
-  // shared session), arriving as LongType — and plain timestamp[us],
+  // spark.sql.legacy.parquet.nanosAsLong=true (the session factory,
+  // graft.Session.build, sets it; never mutated here: a conf.set
+  // inside a query builder is a global side effect on a shared
+  // session), arriving as LongType — and plain timestamp[us],
   // arriving as TimestampType (or TimestampNTZType when the file is
   // not UTC-adjusted). [[normalizeTsNanos]] folds all vintages into the
   // engine convention (epoch-NANOS long) so downstream integer time
@@ -973,8 +973,9 @@ object SparkEntry {
     * near-COMPLETE at any SF (uniform supplier assignment makes all
     * supplier pairs co-occur), so its triangle count is ~n³/6 — output
     * volume, not operator cost; the decile subgraph keeps the contract
-    * query answer-bounded at every SF while GraphSmoke demonstrates
-    * the operator on realistic sparse skewed graphs at 20M edges.
+    * query answer-bounded at every SF while GraphSmoke demonstrated
+    * the operator on realistic sparse skewed graphs at 20M edges
+    * (`git show f46c792:src/main/scala/graft/dev/GraphSmoke.scala`).
     */
   private def qTriangles(s: SparkSession, dir: String): DataFrame = {
     // decile subgraph = the shared pair cache filtered to decile

@@ -2,8 +2,6 @@ package graft.dev
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
 /** DBLP-at-volume smoke: generate an n-record faithful dblp.xml slice
   * ([[DblpGen]]), run the FULL pipeline with every flag on, and print
   * per-stage wall times + whole-run MB/s. Correctness at this shape is
@@ -20,10 +18,7 @@ object DblpSmoke {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toInt else 200000
     val dirs = args.contains("dirs")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.build("local[32]", 32)
 
     val dir = Files.createTempDirectory("dblp_smoke")
     val t0 = System.nanoTime()

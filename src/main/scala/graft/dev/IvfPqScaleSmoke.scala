@@ -1,6 +1,5 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Composed IVF×PQ index at volume: build the persisted
@@ -43,10 +42,7 @@ object IvfPqScaleSmoke {
     val n = if (args.length > 0) args(0).toInt else 1000000
     val nq = if (args.length > 1) args(1).toInt else 1000
     val nBuckets = 256
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.build("local[32]", 32)
     import graft.operators.{Clustering, Similarity}
 
     // clustered synthetic vectors: center (i % nBuckets) + offset

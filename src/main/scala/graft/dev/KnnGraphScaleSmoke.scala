@@ -1,6 +1,5 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 
@@ -130,11 +129,10 @@ object KnnGraphScaleSmoke {
     // call site) is sized per executor memory; past broadcastable
     // corpus sizes, shuffled-hash join (spark.sql.join
     // .preferSortMergeJoin=false) keeps the no-sort property.
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", parts.toString)
-      .config("spark.sql.autoBroadcastJoinThreshold", (512L * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // (a spark.* system property lands in the SparkConf, so every
+    // session on the context, scoped children included, inherits it)
+    System.setProperty("spark.sql.autoBroadcastJoinThreshold", (512L * 1024 * 1024).toString)
+    val spark = graft.Session.build("local[32]", parts)
     println(s"PARTS shuffle partitions: $parts (broadcast threshold 512m)")
 
     // centered clustered corpus with a SMOOTH within-cluster manifold:

@@ -1,7 +1,5 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
-
 /** Times individual SparkEntry queries under bench-identical session
   * settings. Usage (sbt):
   *   runMain graft.dev.ProfileQueries q44_xml_relations q72_stream_window_stats
@@ -13,16 +11,8 @@ object ProfileQueries {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftExtensions.register(spark)
+    val spark = graft.Session.build(s"local[$cpus]", cpus.toInt)
+    spark.conf.set("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
     try spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1000).groupBy("l_returnflag").count().count()
     catch { case _: Throwable => () }
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)

@@ -1,7 +1,5 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
-
 /** Phase-level timing for the streaming contract queries: where do
   * q72/q73 spend their time (query start, microbatches, stop)?
   * Prints each microbatch's durationMs breakdown from recentProgress.
@@ -27,18 +25,12 @@ object ProfileStream {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // static conf, so builder-time; inherited from the SparkConf by
-      // every session created on this context
-      .config("spark.sql.streaming.streamingQueryListeners",
-        classOf[PrintListener].getName)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftExtensions.register(spark)
+    // static conf, so set before the context exists: a spark.* system
+    // property lands in the SparkConf, which every session created on
+    // this context inherits
+    System.setProperty("spark.sql.streaming.streamingQueryListeners",
+      classOf[PrintListener].getName)
+    val spark = graft.Session.build(s"local[$cpus]", cpus.toInt)
 
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {

@@ -128,8 +128,9 @@ case class InferType(child: Expression) extends UnaryExpression {
 
 /** Session extension registering the engine's native functions —
   * `spark.sql("SELECT infer_type(c) ...")` works in any session built
-  * with `.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.functions.GraftExtensions`.
+  * with `.withExtensions(new GraftExtensions)` (as [[graft.Session]]
+  * does) or `spark.sql.extensions=graft.functions.GraftExtensions`,
+  * and in every `newSession()` child of such a session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
@@ -140,7 +141,7 @@ object GraftExtensions {
   private def fn(name: String, cls: Class[_], builder: Seq[Expression] => Expression) =
     (new FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
 
-  private[graft] val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+  private val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     fn("infer_type", classOf[InferType], children => InferType(children.head)),
     fn("shingle_hashes", classOf[ShingleHashes], MinHash.shingleHashesBuilder),
     fn("window_hashes", classOf[WindowHashes], MinHash.windowHashesBuilder),
@@ -168,12 +169,4 @@ object GraftExtensions {
     fn("cms_query", classOf[CmsQuery], Sketch.cmsQueryBuilder),
     fn("pos_slot_intersect_count", classOf[PosSlotIntersectCount], PosOps.posSlotIntersectCountBuilder),
     fn("pos_pair_count", classOf[PosPairCount], PosOps.posPairCountBuilder))
-
-  /** Register the engine's functions on an already-built session (for
-    * sessions not constructed with `.withExtensions`).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    functions.foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
 }

@@ -1133,7 +1133,8 @@ object Similarity {
     * scalar form instead: array lambdas are CodegenFallback, and an
     * interpreted fold per candidate pair made the binary rung SLOWER
     * than the native-dot brute scan (the dotDeclarative lesson,
-    * measured again in dev/AnnLadderSmoke).
+    * measured again in AnnLadderSmoke, since deleted:
+    * `git show f46c792:src/main/scala/graft/dev/AnnLadderSmoke.scala`).
     */
   def binaryHamming(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => bit_count(x.bitwiseXOR(y)).cast("int")),
@@ -1508,8 +1509,9 @@ object Similarity {
     // (rounds × N·k dead cached rows plus the rounds' dead broadcast
     // exchanges pinned behind them; the i/j-side vector lookups never
     // canonicalize equal, so every round leaves two ~280MB-at-1M
-    // exchange broadcasts for the ContextCleaner — dev/BuildPlanProbe
-    // pins the plan shape). Two measured dead ends, so nobody re-digs
+    // exchange broadcasts for the ContextCleaner — BuildPlanProbe, since
+    // deleted, pinned the plan shape: `git show
+    // f46c792:src/main/scala/graft/dev/BuildPlanProbe.scala`). Two measured dead ends, so nobody re-digs
     // them: a broadcast-once mapPartitions scoring kernel lost to the
     // codegen'd broadcast-hash joins at 500k (Dataset-encoding +
     // binary-search overhead > the rebuild cost), and a per-round

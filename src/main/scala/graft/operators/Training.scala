@@ -706,7 +706,8 @@ object Training {
     * vocab-sized per-word fertility table ([[unigramFertility]])
     * joins onto the exploded tokens — UNHINTED, because real
     * vocabularies reach tens of millions of words (the UnigramSmoke
-    * corpus has 30M) where a forced broadcast would OOM the driver;
+    * corpus has 30M; `git show
+    * f46c792:src/main/scala/graft/dev/UnigramSmoke.scala`) where a forced broadcast would OOM the driver;
     * the table is persisted, so AQE broadcasts it exactly when it
     * fits — and one doc-keyed aggregate sums it. Corpus rows pay one
     * explode + two skinny exchanges, never the DP.

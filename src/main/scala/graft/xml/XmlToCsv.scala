@@ -274,15 +274,9 @@ object XmlToCsv {
         case other => throw new IllegalArgumentException(s"unknown arg '$other'\n$usage")
       }
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-xml-to-csv")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build(sys.env.getOrElse("SPARK_MASTER", "local[*]"),
+      sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+        .getOrElse(Runtime.getRuntime.availableProcessors()))
     try {
       val t0 = System.nanoTime()
       val res = run(spark, config)

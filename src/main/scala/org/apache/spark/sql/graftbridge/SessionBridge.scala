@@ -44,6 +44,12 @@ object SessionBridge {
     * carrying exactly `confs` on top of the parent's initial conf —
     * memoized, immutable after creation. Callers must NOT mutate the
     * returned session's conf.
+    *
+    * The child starts from the parent's BUILD-time conf: a conf set on
+    * the parent at runtime (`parent.conf.set`) is not visible in the
+    * child. It does share the parent's session extensions, so the
+    * engine's SQL functions resolve in it when the parent was built by
+    * [[graft.Session.build]].
     */
   def scoped(parent: SparkSession, confs: Seq[(String, String)]): SparkSession = {
     val perParent = scopedCache.computeIfAbsent(parent,

@@ -109,4 +109,8 @@ class SparkEntrySpec extends SparkTestBase {
       assert(stages.get <= 1150, s"buildCaches ran ${stages.get} stages (budget 1150)")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  test("entry: the driver's smoke query returns rows on sf0.001") {
+    assert(SparkEntry.entry(spark).count() > 0)
+  }
 }

@@ -6,24 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class InferTypeExpressionSpec extends AnyFunSuite {
 
-  // dedicated session: extensions must be installed at build time, and
-  // getOrCreate would silently reuse another suite's session — clear
-  // the default first so this builder actually applies the extension
-  private lazy val spark: SparkSession = {
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      // fail hard if the generated code does not compile — a plan-string
-      // match alone passes even when janino rejects the emitted source
-      // and Spark silently falls back to interpreted eval
-      .config("spark.sql.codegen.fallback", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-  }
+  private lazy val spark: SparkSession = graft.SparkTestBase.strictCodegen()
 
   test("native infer_type agrees with the declarative chain on every case") {
     import spark.implicits._

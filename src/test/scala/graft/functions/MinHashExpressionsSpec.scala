@@ -15,18 +15,7 @@ import graft.operators.{Dedup, TextAnalysis}
   */
 class MinHashExpressionsSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = {
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-minhash-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.fallback", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-  }
+  private lazy val spark: SparkSession = graft.SparkTestBase.strictCodegen()
 
   private def docs = {
     import spark.implicits._

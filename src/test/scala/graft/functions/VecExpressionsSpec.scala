@@ -13,18 +13,7 @@ import graft.operators.Similarity
   */
 class VecExpressionsSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = {
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-vec-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.fallback", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-  }
+  private lazy val spark: SparkSession = graft.SparkTestBase.strictCodegen()
 
   test("vec_dot is bit-identical to the zip_with/aggregate formulation") {
     import spark.implicits._

@@ -91,4 +91,18 @@ class ConcurrentScopeSpec extends SparkTestBase {
       e, k = 3, beam = 4, hops = 1, entryStride = 11L)
     assert(served.sparkSession eq spark)
   }
+
+  test("scoped and plain child sessions resolve the engine's SQL functions by name") {
+    // the functions are injected when the session is built, so every
+    // SessionState made from it has them; a registry write on the
+    // parent alone would leave these children with an AnalysisException
+    val scoped = org.apache.spark.sql.graftbridge.SessionBridge.scoped(spark,
+      Seq("spark.sql.shuffle.partitions" -> "3"))
+    Seq(scoped, spark.newSession()).foreach { child =>
+      val r = child.sql("SELECT vec_dot(array(1.0F, 2.0F), array(3.0F, 4.0F)) AS d, " +
+        "infer_type('2020-01-02') AS t").head()
+      assert(r.getDouble(0) == 11.0)
+      assert(r.getString(1) == "date")
+    }
+  }
 }
