@@ -15,6 +15,15 @@ import graft.xml.{Annotate, Dtd, Flatten, XmlRecords}
   */
 object SparkEntry {
 
+  /** The shared build-once artifacts (graphs, indexes, derived
+    * tables), each a [[Memo]] declared below. Declaration order is
+    * build order: every memo is declared after the memos its build
+    * calls, so [[buildCaches]] prices each build on its own. It must
+    * be declared before every memo: they register here as the object
+    * initializes.
+    */
+  private[graft] val memos = new Memo.Registry
+
   // events.ts has shipped in two fixture vintages: INT64
   // TIMESTAMP(NANOS) — readable only under
   // spark.sql.legacy.parquet.nanosAsLong=true (the session factory,
@@ -32,6 +41,13 @@ object SparkEntry {
   // epoch_us(ts) / date_trunc('hour', ts) hold for either vintage.
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     normalizeTsNanos(s.read.parquet(s"$dir/$name.parquet"))
+
+  /** The first `bytes` bytes of `x`'s MD5 in hex: the per-dir key in
+    * temp paths (12 hex chars) and warehouse table names (8).
+    */
+  private def tag(x: String, bytes: Int = 6): String =
+    java.security.MessageDigest.getInstance("MD5").digest(x.getBytes("UTF-8"))
+      .take(bytes).map("%02x".format(_)).mkString
 
   /** Rewrite a TimestampType `ts` column to epoch-nanos long (exact:
     * unix_micros is integral, and micros*1000 cannot overflow a long
@@ -815,10 +831,8 @@ object SparkEntry {
     val docs = t(s, dir, "documents")
     // per-(sf dir) export path, same collision-proofing as the
     // warehouse table names
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
     val out = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft_jsonl_export", digest).toString
+      System.getProperty("java.io.tmpdir"), "graft_jsonl_export", tag(dir)).toString
     graft.operators.Scale.writeRangeShardedJsonl(docs, col("doc_id"), 4, out).collect()
     s.read.schema(docs.schema).json(out)
       .groupBy("lang")
@@ -874,25 +888,17 @@ object SparkEntry {
       maxMatches = 1L)
       .orderBy("doc_id")
 
-  /** The trained perceptron model behind q130/q131 — trained ONCE per
-    * (session, sf dir) and priced in [[buildCaches]]: q131's previous
-    * shape re-ran the full 3-round training per invocation just to
+  /** The trained perceptron model behind q130/q131, a [[Memo]]: q131's
+    * previous shape re-ran the full 3-round training per invocation just to
     * apply the weights (the "re-pays a build per invocation" class
     * the r15 verdict told this repo to audit out).
     */
-  @transient private var perceptronCache: (SparkSession, String, DataFrame) = null
-
-  private def perceptronModel(s: SparkSession, dir: String): DataFrame = synchronized {
-    if (perceptronCache != null && (perceptronCache._1 eq s)
-        && perceptronCache._2 == dir) perceptronCache._3
-    else {
-      val m = graft.operators.Training.trainBatchPerceptron(t(s, dir, "documents"),
-        col("doc_id"), col("text"), col("lang") === "en",
-        buckets = 64, iters = 3).persist()
-      m.count()
-      perceptronCache = (s, dir, m)
-      m
-    }
+  private val perceptronModel = memos("perceptron_model") { (s, dir) =>
+    val m = graft.operators.Training.trainBatchPerceptron(t(s, dir, "documents"),
+      col("doc_id"), col("text"), col("lang") === "en",
+      buckets = 64, iters = 3).persist()
+    m.count()
+    m
   }
 
   /** Batch-perceptron training: 3 order-independent integer rounds on
@@ -916,32 +922,21 @@ object SparkEntry {
     * extracts from XML (reference XMLToCSV.py:357-417), derived here
     * from the fixture tables so graph analytics are oracle-checkable.
     */
-  @transient private var coShipPairsCache: (SparkSession, String, DataFrame) = null
-
   /** Distinct directed supplier co-shipping pairs (both orientations),
-    * built ONCE per session and persisted — the shared edge table all
-    * three graph contract queries (q132/q152/q133) analyze. This is
-    * the production shape: materialize the graph once, run many
-    * analyses against it; the build is priced explicitly in
-    * `buildCaches` ("co_ship_pairs") so no query's first rep absorbs
-    * the lineitem self-join + distinct.
+    * a persisted [[Memo]] — the shared edge table all three graph
+    * contract queries (q132/q152/q133) analyze. This is the production
+    * shape: materialize the graph once, run many analyses against it.
     */
-  private def supplierPairs(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      if (coShipPairsCache != null && (coShipPairsCache._1 eq s) && coShipPairsCache._2 == dir)
-        coShipPairsCache._3
-      else {
-        val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-        val pairs = li.as("a").join(li.as("b"),
-            col("a.l_orderkey") === col("b.l_orderkey") &&
-              col("a.l_suppkey") =!= col("b.l_suppkey"))
-          .select(col("a.l_suppkey").as("src"), col("b.l_suppkey").as("dst"))
-          .distinct().persist()
-        pairs.count()
-        coShipPairsCache = (s, dir, pairs)
-        pairs
-      }
-    }
+  private val supplierPairs = memos("co_ship_pairs") { (s, dir) =>
+    val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
+    val pairs = li.as("a").join(li.as("b"),
+        col("a.l_orderkey") === col("b.l_orderkey") &&
+          col("a.l_suppkey") =!= col("b.l_suppkey"))
+      .select(col("a.l_suppkey").as("src"), col("b.l_suppkey").as("dst"))
+      .distinct().persist()
+    pairs.count()
+    pairs
+  }
 
   /** Integer-exact PageRank, 3 rounds, over the supplier co-shipping
     * graph; top 20 by rank (node id tie-break).
@@ -996,32 +991,23 @@ object SparkEntry {
     * small-k peel). The lead window is PARTITIONED by event_type —
     * never a global single-task sort.
     *
-    * Built ONCE per session and persisted ([[supplierPairs]]'s
-    * discipline, priced in [[buildCaches]] as "event_user_pairs"):
-    * six contract queries (q177/q178/q189/q190/q195/q200) analyze
-    * this same edge table, and production materializes a graph once
-    * and runs many analyses against it — each query's reps then
-    * measure the ANALYSIS, not a repeated window-scan of the fixture.
+    * A persisted [[Memo]] like [[supplierPairs]]: six contract queries
+    * (q177/q178/q189/q190/q195/q200) analyze this same edge table, and
+    * production materializes a graph once and runs many analyses
+    * against it — each query's reps then measure the ANALYSIS, not a
+    * repeated window-scan of the fixture.
     */
-  @transient private var eventUserPairsCache: (SparkSession, String, DataFrame) = null
-
-  private def eventUserPairs(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      if (eventUserPairsCache != null && (eventUserPairsCache._1 eq s)
-          && eventUserPairsCache._2 == dir) eventUserPairsCache._3
-      else {
-        val ev = t(s, dir, "events").where(col("event_id") % 16 === 3)
-        val w = Window.partitionBy(col("event_type")).orderBy(col("ts"), col("event_id"))
-        val pairs = ev
-          .select(col("user_id"), lead(col("user_id"), 1).over(w).as("nxt"))
-          .where(col("nxt").isNotNull && col("nxt") =!= col("user_id"))
-          .select(col("user_id").as("src"), col("nxt").as("dst"))
-          .persist()
-        pairs.count()
-        eventUserPairsCache = (s, dir, pairs)
-        pairs
-      }
-    }
+  private val eventUserPairs = memos("event_user_pairs") { (s, dir) =>
+    val ev = t(s, dir, "events").where(col("event_id") % 16 === 3)
+    val w = Window.partitionBy(col("event_type")).orderBy(col("ts"), col("event_id"))
+    val pairs = ev
+      .select(col("user_id"), lead(col("user_id"), 1).over(w).as("nxt"))
+      .where(col("nxt").isNotNull && col("nxt") =!= col("user_id"))
+      .select(col("user_id").as("src"), col("nxt").as("dst"))
+      .persist()
+    pairs.count()
+    pairs
+  }
 
   /** 6-round synchronous k-core peel (k = 6) of the event-succession
     * user graph: surviving users with their within-survivor degree.
@@ -1049,34 +1035,25 @@ object SparkEntry {
     * Quantities are integral in the fixture, summed as longs — no
     * float comparison anywhere.
     *
-    * Built ONCE per session and persisted ([[supplierPairs]]'s
-    * discipline, priced in [[buildCaches]] as "pref_comparisons"):
-    * the preference family (q179/q180/q185) shares this comparison
-    * set, and production derives a comparison log once per release —
-    * each query's reps then measure its own aggregation/MM rounds,
-    * not a repeated lineitem self-join.
+    * A persisted [[Memo]] like [[supplierPairs]]: the preference family
+    * (q179/q180/q185) shares this comparison set, and production
+    * derives a comparison log once per release — each query's reps then
+    * measure its own aggregation/MM rounds, not a repeated lineitem
+    * self-join.
     */
-  @transient private var supplierComparisonsCache: (SparkSession, String, DataFrame) = null
-
-  private def supplierComparisons(s: SparkSession, dir: String): DataFrame =
-    synchronized {
-      if (supplierComparisonsCache != null && (supplierComparisonsCache._1 eq s)
-          && supplierComparisonsCache._2 == dir) supplierComparisonsCache._3
-      else {
-        val oq = t(s, dir, "lineitem")
-          .groupBy(col("l_orderkey").as("o"), col("l_suppkey").as("sk"))
-          .agg(sum(col("l_quantity").cast("long")).as("q"))
-        val comps = oq.as("a").join(oq.as("b"),
-            col("a.o") === col("b.o") && col("a.sk") < col("b.sk"))
-          .select(
-            when(col("a.q") >= col("b.q"), col("a.sk")).otherwise(col("b.sk")).as("winner"),
-            when(col("a.q") >= col("b.q"), col("b.sk")).otherwise(col("a.sk")).as("loser"))
-          .persist()
-        comps.count()
-        supplierComparisonsCache = (s, dir, comps)
-        comps
-      }
-    }
+  private val supplierComparisons = memos("pref_comparisons") { (s, dir) =>
+    val oq = t(s, dir, "lineitem")
+      .groupBy(col("l_orderkey").as("o"), col("l_suppkey").as("sk"))
+      .agg(sum(col("l_quantity").cast("long")).as("q"))
+    val comps = oq.as("a").join(oq.as("b"),
+        col("a.o") === col("b.o") && col("a.sk") < col("b.sk"))
+      .select(
+        when(col("a.q") >= col("b.q"), col("a.sk")).otherwise(col("b.sk")).as("winner"),
+        when(col("a.q") >= col("b.q"), col("b.sk")).otherwise(col("a.sk")).as("loser"))
+      .persist()
+    comps.count()
+    comps
+  }
 
   /** Per-item preference summary (wins, losses, exact ppm win rate,
     * Borda score) over the supplier comparison set.
@@ -1571,10 +1548,8 @@ object SparkEntry {
     */
   private def qOrcRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
     val out = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft_orc_export", digest).toString
+      System.getProperty("java.io.tmpdir"), "graft_orc_export", tag(dir)).toString
     graft.operators.Scale.writeRangeShardedOrc(docs, col("doc_id"), 4, out).collect()
     s.read.orc(out)
       .groupBy("lang")
@@ -1595,10 +1570,8 @@ object SparkEntry {
   private def qAvroRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
     val out = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft_avro_export", digest).toString
+      System.getProperty("java.io.tmpdir"), "graft_avro_export", tag(dir)).toString
     graft.sink.AvroArchive.write(docs, col("doc_id"), 4, out).collect()
     graft.sink.AvroArchive.read(s, s"$out/shard=*/part-*.avro", docs.schema)
       .groupBy("lang")
@@ -1692,23 +1665,14 @@ object SparkEntry {
   private def qWordPieceFertility(s: SparkSession, dir: String): DataFrame =
     wordpieceFert(s, dir).orderBy("word")
 
-  /** The trained per-word WordPiece fertility table behind q236/q242
-    * — trained ONCE per (session, sf dir) and priced in
-    * [[buildCaches]] (q236 and q242 each re-ran the 3-round merge
+  /** The trained per-word WordPiece fertility table behind q236/q242,
+    * a [[Memo]] (q236 and q242 each re-ran the 3-round merge
     * loop per invocation before r16 — the re-pay class the verdict
     * flagged; q235 keeps pricing the TRAINING itself).
     */
-  @transient private var wpFertCache: (SparkSession, String, DataFrame) = null
-
-  private def wordpieceFert(s: SparkSession, dir: String): DataFrame = synchronized {
-    if (wpFertCache != null && (wpFertCache._1 eq s)
-        && wpFertCache._2 == dir) wpFertCache._3
-    else {
-      val f = graft.operators.Training.wordpieceFertility(
-        t(s, dir, "documents"), col("text"), nMerges = 3)
-      wpFertCache = (s, dir, f)
-      f
-    }
+  private val wordpieceFert = memos("wordpiece_fert") { (s, dir) =>
+    graft.operators.Training.wordpieceFertility(
+      t(s, dir, "documents"), col("text"), nMerges = 3)
   }
 
   /** Train-then-apply for the unigram model: per distinct word its
@@ -1732,10 +1696,8 @@ object SparkEntry {
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
     def centsOf(lo: Int, hi: Int) = e.where(col("id") >= lo && col("id") < hi)
       .select(col("id").as("cent_id"), col("vec").as("cent_v"))
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
     val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_ivf_part", digest).toString
+      "graft_ivf_part", tag(dir)).toString
     val stored = graft.operators.Similarity.ivfWritePartitioned(
       graft.operators.Similarity.ivfIndexWith(e, centsOf(0, 8)), path)
     val newCents = centsOf(8, 16)
@@ -1896,53 +1858,14 @@ object SparkEntry {
     * 1/4 arrives as a stream and appends map-only (assign + PQ-encode)
     * into the bucket partition dirs via foreachBatch, and the drained
     * index's serve must equal q234's full-corpus build exactly (its
-    * oracle verbatim). The build+drain runs ONCE per (session, sf dir)
-    * ([[streamIvfIngestStored]], priced in buildCaches as
-    * "stream_ivf_ingest" — the q280/[[streamKnnIngestStored]]
-    * lifecycle pricing applied to the IVF family); the query serves
+    * oracle verbatim). The build+drain is a [[Memo]],
+    * [[streamIvfIngestStored]] — the q280/[[streamKnnIngestStored]]
+    * lifecycle pricing applied to the IVF family; the query serves
     * the drained index, which is what a consumer of a
     * stream-maintained index reads. q243/q255 keep their
     * per-invocation streamed legs, so the family still prices live
     * streaming per rep.
     */
-  @transient private var streamIvfIngestCache:
-    (SparkSession, String, graft.operators.Similarity.IvfPqIndex) = null
-
-  private def streamIvfIngestStored(
-      s0: SparkSession, dir: String): graft.operators.Similarity.IvfPqIndex =
-    synchronized {
-      if (streamIvfIngestCache != null && (streamIvfIngestCache._1 eq s0)
-          && streamIvfIngestCache._2 == dir) streamIvfIngestCache._3
-      else {
-        val suite = ivfPqSuite(s0, dir)
-        val s = streamSession(s0)
-        val e0 = s.read.parquet(s"$dir/embeddings.parquet")
-        val e = e0.select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val digest = java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-        val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-          "graft_ivfpq_ingest",
-          s"${digest}_${ProcessHandle.current().pid()}").toString
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s0.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(path), true)
-        val idx0 = graft.operators.Similarity.ivfPqWritePartitioned(
-          e.where(pmod(col("id"), lit(4L)) =!= 3), suite.cents, suite.model, path)
-        val batchStream = s.readStream.schema(e0.schema)
-          .parquet(streamDir(dir, "embeddings"))
-          .where(pmod(col("vec_id"), lit(4L)) === 3)
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val q = graft.streaming.StreamingOps.streamingIvfPqIngest(batchStream, idx0)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        ckptRoots.add(java.nio.file.Paths.get(path))
-        ckptHook
-        streamIvfIngestCache = (s0, dir, idx0)
-        idx0
-      }
-    }
-
   private def qStreamIvfPqIngest(s0: SparkSession, dir: String): DataFrame =
     graft.operators.Similarity.ivfPqTopK(
       s0, streamIvfIngestStored(s0, dir), t(s0, dir, "embeddings")
@@ -2044,10 +1967,8 @@ object SparkEntry {
   private def qBinaryAnnStored(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
     val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_binary_signed", digest).toString
+      "graft_binary_signed", tag(dir)).toString
     graft.operators.Similarity.binaryWriteSigned(e, path)
     graft.operators.Similarity.binaryTopKStored(
       s, path, e.where(col("id") >= 5 && col("id") < 10), k = 3, rerank = 10)
@@ -2140,25 +2061,16 @@ object SparkEntry {
 
   /** One-time LSH-seeded NN-Descent k-NN graph over the embedding
     * corpus — the shared artifact behind q262 (the graph itself),
-    * q263 (beam-search serve) and q264 (recall gate). Memoized per
-    * (session, sf dir) and priced in [[buildCaches]] like the other
-    * index artifacts, so the serve/recall queries measure steady
-    * state; Verify never calls buildCaches and builds it lazily with
-    * identical results (the build is deterministic end to end).
+    * q263 (beam-search serve) and q264 (recall gate). A [[Memo]] like
+    * the other index artifacts, so the serve/recall queries measure
+    * steady state; Verify never calls buildCaches and builds it
+    * lazily with identical results (the build is deterministic end to end).
     */
-  @transient private var knnGraphCache: (SparkSession, String, DataFrame) = null
-
-  private def knnGraph(s: SparkSession, dir: String): DataFrame = synchronized {
-    if (knnGraphCache != null && (knnGraphCache._1 eq s) && knnGraphCache._2 == dir)
-      knnGraphCache._3
-    else {
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val g = cacheSized(graft.operators.Similarity.knnGraphBuild(
-        e, k = 8, rounds = 3, revCap = 32, lshBits = 5, lshTables = 3))
-      knnGraphCache = (s, dir, g)
-      g
-    }
+  private val knnGraph = memos("knn_graph") { (s, dir) =>
+    val e = t(s, dir, "embeddings")
+      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    cacheSized(graft.operators.Similarity.knnGraphBuild(
+      e, k = 8, rounds = 3, revCap = 32, lshBits = 5, lshTables = 3))
   }
 
   /** Graph-based ANN, build leg: the LSH-seeded NN-Descent k-NN graph
@@ -2203,23 +2115,15 @@ object SparkEntry {
   }
 
   /** The 80%-corpus base graph behind q268's append leg (old rows =
-    * vec_id % 5 <> 4 — proportional at every scale factor), memoized
-    * like [[knnGraph]] and priced in buildCaches.
+    * vec_id % 5 <> 4 — proportional at every scale factor), a
+    * [[Memo]] like [[knnGraph]].
     */
-  @transient private var knnGraphOldCache: (SparkSession, String, DataFrame) = null
-
-  private def knnGraphOld(s: SparkSession, dir: String): DataFrame = synchronized {
-    if (knnGraphOldCache != null && (knnGraphOldCache._1 eq s)
-        && knnGraphOldCache._2 == dir) knnGraphOldCache._3
-    else {
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val g = cacheSized(graft.operators.Similarity.knnGraphBuild(
-        e.where(pmod(col("id"), lit(5L)) =!= 4),
-        k = 8, rounds = 3, revCap = 32, lshBits = 5, lshTables = 3))
-      knnGraphOldCache = (s, dir, g)
-      g
-    }
+  private val knnGraphOld = memos("knn_graph_old") { (s, dir) =>
+    val e = t(s, dir, "embeddings")
+      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    cacheSized(graft.operators.Similarity.knnGraphBuild(
+      e.where(pmod(col("id"), lit(5L)) =!= 4),
+      k = 8, rounds = 3, revCap = 32, lshBits = 5, lshTables = 3))
   }
 
   /** Graph-based ANN, append leg (q268 — the composed index's q241
@@ -2254,15 +2158,13 @@ object SparkEntry {
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
     val corpus = s.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
     // JVM-unique staging (digest + pid, sessStagedFile's discipline):
     // a digest-only dir lets two concurrent JVMs running this query
     // race — one deletes the other's in-flight drain, or the reader
     // sees doubled/partial rows
     val out = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
       "graft_knn_stream_serve",
-      s"${digest}_${ProcessHandle.current().pid()}").toString
+      s"${tag(dir)}_${ProcessHandle.current().pid()}").toString
     // per-invocation clean slate: stale results from a previous drain
     // in THIS JVM would double the appended output
     val fs = new org.apache.hadoop.fs.Path(out)
@@ -2329,23 +2231,15 @@ object SparkEntry {
   /** The layer-1 HNSW-style graph behind q271/q272: [[knnGraph]]'s
     * build restricted to the knnLayerMemberFilter(1, 8) subsample
     * (~N/8 nodes — deterministic Knuth-hash divisibility, the
-    * reproducible stand-in for HNSW's geometric level draw). Memoized
-    * per (session, sf dir) and priced in [[buildCaches]].
+    * reproducible stand-in for HNSW's geometric level draw). A
+    * [[Memo]].
     */
-  @transient private var knnGraphL1Cache: (SparkSession, String, DataFrame) = null
-
-  private def knnGraphL1(s: SparkSession, dir: String): DataFrame = synchronized {
-    if (knnGraphL1Cache != null && (knnGraphL1Cache._1 eq s)
-        && knnGraphL1Cache._2 == dir) knnGraphL1Cache._3
-    else {
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val g = cacheSized(graft.operators.Similarity.knnGraphBuild(
-        e.where(graft.operators.Similarity.knnLayerMemberFilter(col("id"), 1, 8)),
-        k = 8, rounds = 3, revCap = 32, lshBits = 5, lshTables = 3))
-      knnGraphL1Cache = (s, dir, g)
-      g
-    }
+  private val knnGraphL1 = memos("knn_graph_l1") { (s, dir) =>
+    val e = t(s, dir, "embeddings")
+      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    cacheSized(graft.operators.Similarity.knnGraphBuild(
+      e.where(graft.operators.Similarity.knnLayerMemberFilter(col("id"), 1, 8)),
+      k = 8, rounds = 3, revCap = 32, lshBits = 5, lshTables = 3))
   }
 
   /** Graph-based ANN, hierarchical serve leg (q271) — the scale fix
@@ -2400,49 +2294,36 @@ object SparkEntry {
 
   /** The PERSISTED graph index behind q273 — the graph family's
     * storage leg, so a serving fleet reads the graph from disk
-    * instead of depending on one session's memoized DataFrame.
-    * Written once per (session, sf dir) to a JVM-unique temp path
-    * (removed by the ckpt shutdown hook) and priced in
-    * [[buildCaches]].
+    * instead of depending on one session's memoized DataFrame. A
+    * [[Memo]] written to a JVM-unique temp path (removed by the ckpt
+    * shutdown hook).
     */
-  @transient private var knnGraphStoreCache:
-    (SparkSession, String, graft.operators.Similarity.KnnGraphIndex) = null
-
-  private def knnGraphStored(
-      s: SparkSession, dir: String): graft.operators.Similarity.KnnGraphIndex =
-    synchronized {
-      if (knnGraphStoreCache != null && (knnGraphStoreCache._1 eq s)
-          && knnGraphStoreCache._2 == dir) knnGraphStoreCache._3
-      else {
-        val e = t(s, dir, "embeddings")
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val digest = java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-        val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-          "graft_knn_graph_idx",
-          s"${digest}_${ProcessHandle.current().pid()}").toString
-        val idx = graft.operators.Similarity.knnGraphWritePartitioned(
-          s, knnGraph(s, dir), e, path, parts = 8, k = 8,
-          lshBits = 5, lshTables = 3, anchorsPerBucket = 32)
-        // the hierarchy's layer-1 graph persists beside the base
-        // edges so the SHIPPING serve path (layered descent, q271)
-        // is servable from storage too (q277)
-        graft.operators.Similarity.knnGraphWriteLayer(
-          s, idx, level = 1, knnGraphL1(s, dir),
-          e.where(graft.operators.Similarity.knnLayerMemberFilter(col("id"), 1, 8)))
-        // the serve-tier binary handoff rides beside the parquet —
-        // base edges (q281), the hierarchy layer (q283), and the
-        // top-layer entry list, so the SHIPPING layered descent is
-        // fully binary-servable; each certified through a read-back
-        graft.operators.Similarity.knnGraphWriteBinary(s, idx)
-        graft.operators.Similarity.knnGraphWriteBinaryLayer(s, idx, 1)
-        graft.operators.Similarity.knnGraphWriteBinaryEntries(s, idx)
-        ckptRoots.add(java.nio.file.Paths.get(path))
-        ckptHook
-        knnGraphStoreCache = (s, dir, idx)
-        idx
-      }
-    }
+  private val knnGraphStored = memos("knn_graph_store") { (s, dir) =>
+    val e = t(s, dir, "embeddings")
+      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+      "graft_knn_graph_idx",
+      s"${tag(dir)}_${ProcessHandle.current().pid()}").toString
+    val idx = graft.operators.Similarity.knnGraphWritePartitioned(
+      s, knnGraph(s, dir), e, path, parts = 8, k = 8,
+      lshBits = 5, lshTables = 3, anchorsPerBucket = 32)
+    // the hierarchy's layer-1 graph persists beside the base
+    // edges so the SHIPPING serve path (layered descent, q271)
+    // is servable from storage too (q277)
+    graft.operators.Similarity.knnGraphWriteLayer(
+      s, idx, level = 1, knnGraphL1(s, dir),
+      e.where(graft.operators.Similarity.knnLayerMemberFilter(col("id"), 1, 8)))
+    // the serve-tier binary handoff rides beside the parquet —
+    // base edges (q281), the hierarchy layer (q283), and the
+    // top-layer entry list, so the SHIPPING layered descent is
+    // fully binary-servable; each certified through a read-back
+    graft.operators.Similarity.knnGraphWriteBinary(s, idx)
+    graft.operators.Similarity.knnGraphWriteBinaryLayer(s, idx, 1)
+    graft.operators.Similarity.knnGraphWriteBinaryEntries(s, idx)
+    ckptRoots.add(java.nio.file.Paths.get(path))
+    ckptHook
+    idx
+  }
 
   /** Graph-based ANN, stored-serve leg (q273): beam search over the
     * PERSISTED edge table — serving from storage must equal serving
@@ -2484,8 +2365,8 @@ object SparkEntry {
     * .knnGraphAppendPartitioned]] — batch-signed against the STORED
     * anchor table (never a corpus re-sign), touched-partition-only
     * rewrite — and the read-back equals the in-memory append (q268's
-    * oracle verbatim). The mutation itself runs ONCE per session
-    * ([[knnGraphFlatMutStored]], priced in buildCaches); the query
+    * oracle verbatim). The mutation itself is a [[Memo]]
+    * ([[knnGraphFlatMutStored]]); the query
     * serves the mutated store's read-back, which is what every
     * consumer of an appended index reads.
     */
@@ -2510,74 +2391,51 @@ object SparkEntry {
     }
   }
 
-  /** The persisted 80%-corpus BASE index behind q275, built once per
-    * (session, sf dir) like [[knnGraphStored]]; q275 copies it
-    * file-level per invocation and appends into the copy.
+  /** The persisted 80%-corpus BASE index behind q275, a [[Memo]]
+    * like [[knnGraphStored]]; q275 copies it file-level per invocation
+    * and appends into the copy.
     */
-  @transient private var knnGraphOldStoreCache:
-    (SparkSession, String, graft.operators.Similarity.KnnGraphIndex) = null
-
-  private def knnGraphOldStored(
-      s: SparkSession, dir: String): graft.operators.Similarity.KnnGraphIndex =
-    synchronized {
-      if (knnGraphOldStoreCache != null && (knnGraphOldStoreCache._1 eq s)
-          && knnGraphOldStoreCache._2 == dir) knnGraphOldStoreCache._3
-      else {
-        val e = t(s, dir, "embeddings")
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val old = e.where(pmod(col("id"), lit(5L)) =!= 4)
-        val digest = java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-        val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-          "graft_knn_store_base",
-          s"${digest}_${ProcessHandle.current().pid()}").toString
-        val idx = graft.operators.Similarity.knnGraphWritePartitioned(
-          s, knnGraphOld(s, dir), old, path, parts = 8, k = 8,
-          lshBits = 5, lshTables = 3, anchorsPerBucket = 32)
-        ckptRoots.add(java.nio.file.Paths.get(path))
-        ckptHook
-        knnGraphOldStoreCache = (s, dir, idx)
-        idx
-      }
-    }
+  private val knnGraphOldStored = memos("knn_graph_old_store") { (s, dir) =>
+    val e = t(s, dir, "embeddings")
+      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val old = e.where(pmod(col("id"), lit(5L)) =!= 4)
+    val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+      "graft_knn_store_base",
+      s"${tag(dir)}_${ProcessHandle.current().pid()}").toString
+    val idx = graft.operators.Similarity.knnGraphWritePartitioned(
+      s, knnGraphOld(s, dir), old, path, parts = 8, k = 8,
+      lshBits = 5, lshTables = 3, anchorsPerBucket = 32)
+    ckptRoots.add(java.nio.file.Paths.get(path))
+    ckptHook
+    idx
+  }
 
   /** The APPENDED flat store behind q275: the 80%-corpus index takes
     * the 20% arrivals through the partitioned append against its
-    * STORED anchors — mutated ONCE per (session, sf dir) and priced
-    * in [[buildCaches]] as "knn_graph_flat_mut" (the r15 verdict's
-    * lifecycle rule, the same pricing [[knnGraphHierMutStored]] got
-    * in r16: a production store is mutated once per arrival batch,
+    * STORED anchors — a [[Memo]] (the r15 verdict's lifecycle rule,
+    * the same pricing [[knnGraphHierMutStored]] got in r16: a
+    * production store is mutated once per arrival batch,
     * and re-paying the mutation per bench rep priced the copy+append
     * cycle 2× per round instead of the read path a consumer sees).
     * q276 keeps pricing its per-invocation flat mutation, so the
     * family still has a per-rep mutation cost on the board.
     */
-  @transient private var knnGraphFlatMutCache:
-    (SparkSession, String, graft.operators.Similarity.KnnGraphIndex) = null
-
-  private def knnGraphFlatMutStored(
-      s: SparkSession, dir: String): graft.operators.Similarity.KnnGraphIndex =
-    synchronized {
-      if (knnGraphFlatMutCache != null && (knnGraphFlatMutCache._1 eq s)
-          && knnGraphFlatMutCache._2 == dir) knnGraphFlatMutCache._3
-      else {
-        val e = t(s, dir, "embeddings")
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val base = knnGraphOldStored(s, dir)
-        val path = base.path + "_flatmut"
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(path), true)
-        copyDirLocal(base.path, path)
-        val idx = base.copy(path = path)
-        graft.operators.Similarity.knnGraphAppendPartitioned(
-          s, idx, e, pmod(col("id"), lit(5L)) === 4)
-        ckptRoots.add(java.nio.file.Paths.get(path))
-        ckptHook
-        knnGraphFlatMutCache = (s, dir, idx)
-        idx
-      }
-    }
+  private val knnGraphFlatMutStored = memos("knn_graph_flat_mut") { (s, dir) =>
+    val e = t(s, dir, "embeddings")
+      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val base = knnGraphOldStored(s, dir)
+    val path = base.path + "_flatmut"
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    copyDirLocal(base.path, path)
+    val idx = base.copy(path = path)
+    graft.operators.Similarity.knnGraphAppendPartitioned(
+      s, idx, e, pmod(col("id"), lit(5L)) === 4)
+    ckptRoots.add(java.nio.file.Paths.get(path))
+    ckptHook
+    idx
+  }
 
   private def qKnnGraphStoreAppend(s: SparkSession, dir: String): DataFrame =
     graft.operators.Similarity.knnGraphReadEdges(s, knnGraphFlatMutStored(s, dir))
@@ -2588,37 +2446,26 @@ object SparkEntry {
     * 10-20% refresh trigger) file-copied and taken through
     * [[graft.operators.Similarity.knnGraphRefreshPartitioned]] — one
     * stored-table NN-Descent round, staged-swap written, manifest
-    * counters reset. Mutated ONCE per (session, sf dir), priced in
-    * [[buildCaches]] as "knn_graph_refresh" (the lifecycle rule).
+    * counters reset. A [[Memo]] (the lifecycle rule).
     */
-  @transient private var knnGraphRefreshCache:
-    (SparkSession, String, graft.operators.Similarity.KnnGraphIndex) = null
-
-  private def knnGraphRefreshStored(
-      s: SparkSession, dir: String): graft.operators.Similarity.KnnGraphIndex =
-    synchronized {
-      if (knnGraphRefreshCache != null && (knnGraphRefreshCache._1 eq s)
-          && knnGraphRefreshCache._2 == dir) knnGraphRefreshCache._3
-      else {
-        val e = t(s, dir, "embeddings")
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val base = knnGraphFlatMutStored(s, dir)
-        val path = base.path + "_ref"
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(path), true)
-        copyDirLocal(base.path, path)
-        val idx = base.copy(path = path)
-        // the appended store's corpus is the FULL embedding set (old ∪
-        // arrivals); the refresh round re-runs the descent candidate
-        // web over the mutated edges against it
-        graft.operators.Similarity.knnGraphRefreshPartitioned(s, idx, e)
-        ckptRoots.add(java.nio.file.Paths.get(path))
-        ckptHook
-        knnGraphRefreshCache = (s, dir, idx)
-        idx
-      }
-    }
+  private val knnGraphRefreshStored = memos("knn_graph_refresh") { (s, dir) =>
+    val e = t(s, dir, "embeddings")
+      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val base = knnGraphFlatMutStored(s, dir)
+    val path = base.path + "_ref"
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    copyDirLocal(base.path, path)
+    val idx = base.copy(path = path)
+    // the appended store's corpus is the FULL embedding set (old ∪
+    // arrivals); the refresh round re-runs the descent candidate
+    // web over the mutated edges against it
+    graft.operators.Similarity.knnGraphRefreshPartitioned(s, idx, e)
+    ckptRoots.add(java.nio.file.Paths.get(path))
+    ckptHook
+    idx
+  }
 
   /** Graph-based ANN, storage REFRESH leg (q282 — the drift remedy):
     * the appended store (q275's mutation) takes one
@@ -2647,139 +2494,98 @@ object SparkEntry {
     * the FLAT delete, q269's oracle shape; the layered lifecycle is
     * q278's contract) loses ~1/7 of its nodes through
     * [[graft.operators.Similarity.knnGraphDeletePartitioned]].
-    * Mutated ONCE per (session, sf dir) and priced in [[buildCaches]]
-    * as "knn_graph_del_mut" — the same r15 lifecycle rule the append
+    * A [[Memo]] — the same r15 lifecycle rule the append
     * leg (q275 → "knn_graph_flat_mut") already follows: a production
     * delete mutates the live store once; re-paying the dir copy + the
     * partitioned rewrite per bench rep priced the harness, not the
     * operator. The per-invocation query is the serving fleet's
     * read-back of the mutated store.
     */
-  @transient private var knnGraphDelMutCache:
-    (SparkSession, String, graft.operators.Similarity.KnnGraphIndex) = null
-
-  private def knnGraphDelMutStored(
-      s: SparkSession, dir: String): graft.operators.Similarity.KnnGraphIndex =
-    synchronized {
-      if (knnGraphDelMutCache != null && (knnGraphDelMutCache._1 eq s)
-          && knnGraphDelMutCache._2 == dir) knnGraphDelMutCache._3
-      else {
-        val e = t(s, dir, "embeddings")
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val base = knnGraphStored(s, dir)
-        val path = base.path + "_delmut"
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(path), true)
-        copyDirLocal(base.path, path)
-        fs.delete(new org.apache.hadoop.fs.Path(path + "/layer1"), true)
-        val idx = base.copy(path = path)
-        graft.operators.Similarity.knnGraphDeletePartitioned(
-          s, idx, e, pmod(col("id"), lit(7L)) === 3)
-        ckptRoots.add(java.nio.file.Paths.get(path))
-        ckptHook
-        knnGraphDelMutCache = (s, dir, idx)
-        idx
-      }
-    }
+  private val knnGraphDelMutStored = memos("knn_graph_del_mut") { (s, dir) =>
+    val e = t(s, dir, "embeddings")
+      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val base = knnGraphStored(s, dir)
+    val path = base.path + "_delmut"
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    copyDirLocal(base.path, path)
+    fs.delete(new org.apache.hadoop.fs.Path(path + "/layer1"), true)
+    val idx = base.copy(path = path)
+    graft.operators.Similarity.knnGraphDeletePartitioned(
+      s, idx, e, pmod(col("id"), lit(7L)) === 3)
+    ckptRoots.add(java.nio.file.Paths.get(path))
+    ckptHook
+    idx
+  }
 
   private def qKnnGraphStoreDelete(s: SparkSession, dir: String): DataFrame =
     graft.operators.Similarity.knnGraphReadEdges(s, knnGraphDelMutStored(s, dir))
       .orderBy("node_id", "nb_rank")
 
   /** The layer-1 graph over the OLD (80%) corpus behind q278's
-    * layered lifecycle — [[knnGraphOld]]'s hierarchy sibling,
-    * memoized and priced like the rest of the graph artifacts.
+    * layered lifecycle — [[knnGraphOld]]'s hierarchy sibling, a
+    * [[Memo]] like the rest of the graph artifacts.
     */
-  @transient private var knnGraphOldL1Cache: (SparkSession, String, DataFrame) = null
-
-  private def knnGraphOldL1(s: SparkSession, dir: String): DataFrame = synchronized {
-    if (knnGraphOldL1Cache != null && (knnGraphOldL1Cache._1 eq s)
-        && knnGraphOldL1Cache._2 == dir) knnGraphOldL1Cache._3
-    else {
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val g = cacheSized(graft.operators.Similarity.knnGraphBuild(
-        e.where(pmod(col("id"), lit(5L)) =!= 4
-          && graft.operators.Similarity.knnLayerMemberFilter(col("id"), 1, 8)),
-        k = 8, rounds = 3, revCap = 32, lshBits = 5, lshTables = 3))
-      knnGraphOldL1Cache = (s, dir, g)
-      g
-    }
+  private val knnGraphOldL1 = memos("knn_graph_old_l1") { (s, dir) =>
+    val e = t(s, dir, "embeddings")
+      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    cacheSized(graft.operators.Similarity.knnGraphBuild(
+      e.where(pmod(col("id"), lit(5L)) =!= 4
+        && graft.operators.Similarity.knnLayerMemberFilter(col("id"), 1, 8)),
+      k = 8, rounds = 3, revCap = 32, lshBits = 5, lshTables = 3))
   }
 
   /** The persisted LAYERED 80%-corpus index behind q278 (base edges +
-    * layer-1 graph + per-table deep anchor cuts), built once per
-    * (session, sf dir); q278 file-copies it per invocation and runs
-    * the full mutation lifecycle on the copy.
+    * layer-1 graph + per-table deep anchor cuts), a [[Memo]]; q278
+    * file-copies it per invocation and runs the full mutation
+    * lifecycle on the copy.
     */
-  @transient private var knnGraphOldHierStoreCache:
-    (SparkSession, String, graft.operators.Similarity.KnnGraphIndex) = null
-
-  private def knnGraphOldHierStored(
-      s: SparkSession, dir: String): graft.operators.Similarity.KnnGraphIndex =
-    synchronized {
-      if (knnGraphOldHierStoreCache != null && (knnGraphOldHierStoreCache._1 eq s)
-          && knnGraphOldHierStoreCache._2 == dir) knnGraphOldHierStoreCache._3
-      else {
-        val e = t(s, dir, "embeddings")
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val old = e.where(pmod(col("id"), lit(5L)) =!= 4)
-        val digest = java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-        val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-          "graft_knn_hier_base",
-          s"${digest}_${ProcessHandle.current().pid()}").toString
-        val idx = graft.operators.Similarity.knnGraphWritePartitioned(
-          s, knnGraphOld(s, dir), old, path, parts = 8, k = 8,
-          lshBits = 5, lshTables = 3, anchorsPerBucket = 32, layerFactor = 8)
-        graft.operators.Similarity.knnGraphWriteLayer(
-          s, idx, level = 1, knnGraphOldL1(s, dir),
-          old.where(graft.operators.Similarity.knnLayerMemberFilter(col("id"), 1, 8)))
-        ckptRoots.add(java.nio.file.Paths.get(path))
-        ckptHook
-        knnGraphOldHierStoreCache = (s, dir, idx)
-        idx
-      }
-    }
+  private val knnGraphOldHierStored = memos("knn_graph_hier_store") { (s, dir) =>
+    val e = t(s, dir, "embeddings")
+      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val old = e.where(pmod(col("id"), lit(5L)) =!= 4)
+    val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+      "graft_knn_hier_base",
+      s"${tag(dir)}_${ProcessHandle.current().pid()}").toString
+    val idx = graft.operators.Similarity.knnGraphWritePartitioned(
+      s, knnGraphOld(s, dir), old, path, parts = 8, k = 8,
+      lshBits = 5, lshTables = 3, anchorsPerBucket = 32, layerFactor = 8)
+    graft.operators.Similarity.knnGraphWriteLayer(
+      s, idx, level = 1, knnGraphOldL1(s, dir),
+      old.where(graft.operators.Similarity.knnLayerMemberFilter(col("id"), 1, 8)))
+    ckptRoots.add(java.nio.file.Paths.get(path))
+    ckptHook
+    idx
+  }
 
   /** The MUTATED layered store behind q278: the old-corpus layered
     * index takes the 20% arrivals through the partitioned append
     * (base + layer-1, each against its stored anchors), then ~1/7 of
-    * nodes tombstone out of every layer. Mutated ONCE per (session,
-    * sf dir) — the ingest-pipeline cost, priced in [[buildCaches]]
-    * like the index builds themselves (the r15 verdict's explicit
-    * guidance: lifecycle queries must not re-pay a build per bench
-    * rep; q275/q276 keep pricing the per-invocation flat mutations).
+    * nodes tombstone out of every layer. A [[Memo]] — the
+    * ingest-pipeline cost, priced like the index builds themselves
+    * (the r15 verdict's explicit guidance: lifecycle queries must not
+    * re-pay a build per bench rep; q275/q276 keep pricing the
+    * per-invocation flat mutations).
     */
-  @transient private var knnGraphHierMutCache:
-    (SparkSession, String, graft.operators.Similarity.KnnGraphIndex) = null
-
-  private def knnGraphHierMutStored(
-      s: SparkSession, dir: String): graft.operators.Similarity.KnnGraphIndex =
-    synchronized {
-      if (knnGraphHierMutCache != null && (knnGraphHierMutCache._1 eq s)
-          && knnGraphHierMutCache._2 == dir) knnGraphHierMutCache._3
-      else {
-        val e = t(s, dir, "embeddings")
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val base = knnGraphOldHierStored(s, dir)
-        val path = base.path + "_lcmut"
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(path), true)
-        copyDirLocal(base.path, path)
-        val idx = base.copy(path = path)
-        graft.operators.Similarity.knnGraphAppendPartitioned(
-          s, idx, e, pmod(col("id"), lit(5L)) === 4)
-        graft.operators.Similarity.knnGraphDeletePartitioned(
-          s, idx, e, pmod(col("id"), lit(7L)) === 3)
-        ckptRoots.add(java.nio.file.Paths.get(path))
-        ckptHook
-        knnGraphHierMutCache = (s, dir, idx)
-        idx
-      }
-    }
+  private val knnGraphHierMutStored = memos("knn_graph_hier_mut") { (s, dir) =>
+    val e = t(s, dir, "embeddings")
+      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val base = knnGraphOldHierStored(s, dir)
+    val path = base.path + "_lcmut"
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    copyDirLocal(base.path, path)
+    val idx = base.copy(path = path)
+    graft.operators.Similarity.knnGraphAppendPartitioned(
+      s, idx, e, pmod(col("id"), lit(5L)) === 4)
+    graft.operators.Similarity.knnGraphDeletePartitioned(
+      s, idx, e, pmod(col("id"), lit(7L)) === 3)
+    ckptRoots.add(java.nio.file.Paths.get(path))
+    ckptHook
+    idx
+  }
 
   /** Graph-based ANN, hierarchical storage LIFECYCLE leg (q278): the
     * 20% arrivals append into a persisted LAYERED index — base AND
@@ -2828,11 +2634,9 @@ object SparkEntry {
     val layers = Seq(
       graft.operators.Similarity.knnGraphReadLayer(s, idx, 1),
       graft.operators.Similarity.knnGraphReadEdges(s, idx))
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
     val out = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
       "graft_knn_stream_hier",
-      s"${digest}_${ProcessHandle.current().pid()}").toString
+      s"${tag(dir)}_${ProcessHandle.current().pid()}").toString
     val fs = new org.apache.hadoop.fs.Path(out)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(out), true)
@@ -2884,50 +2688,39 @@ object SparkEntry {
     * same drain granularity as q254/q270).
     */
   /** The streamed-ingest-mutated store behind q280: the base index
-    * copy drained ONCE per (session, sf dir) through the AvailableNow
-    * ingest and priced in [[buildCaches]] as "stream_knn_ingest" —
-    * the same lifecycle pricing as [[knnGraphHierMutStored]] /
+    * copy drained through the AvailableNow ingest, a [[Memo]] — the
+    * same lifecycle pricing as [[knnGraphHierMutStored]] /
     * [[knnGraphFlatMutStored]] (a production ingest mutates the live
     * store as batches arrive; per-rep re-drains priced the dir copy +
     * streaming-harness start/stop 2× per round, the r16 verdict's #1
     * bench item). The per-invocation query reads the drained store —
     * the serving fleet's view of a stream-maintained index.
     */
-  @transient private var streamKnnIngestCache:
-    (SparkSession, String, graft.operators.Similarity.KnnGraphIndex) = null
-
-  private def streamKnnIngestStored(
-      s0: SparkSession, dir: String): graft.operators.Similarity.KnnGraphIndex =
-    synchronized {
-      if (streamKnnIngestCache != null && (streamKnnIngestCache._1 eq s0)
-          && streamKnnIngestCache._2 == dir) streamKnnIngestCache._3
-      else {
-        val base = knnGraphOldStored(s0, dir)
-        val path = base.path + "_ingmut"
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s0.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(path), true)
-        copyDirLocal(base.path, path)
-        val idx = base.copy(path = path)
-        val s = streamSession(s0)
-        val e0 = s.read.parquet(s"$dir/embeddings.parquet")
-        val stream = s.readStream.schema(e0.schema)
-          .parquet(streamDir(dir, "embeddings"))
-          .where(pmod(col("vec_id"), lit(5L)) === 4)
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val old = s.read.parquet(s"$dir/embeddings.parquet")
-          .where(pmod(col("vec_id"), lit(5L)) =!= 4)
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val q = graft.streaming.StreamingOps.streamingKnnGraphIngest(stream, idx, old)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        ckptRoots.add(java.nio.file.Paths.get(path))
-        ckptHook
-        streamKnnIngestCache = (s0, dir, idx)
-        idx
-      }
-    }
+  private val streamKnnIngestStored = memos("stream_knn_ingest") { (s0, dir) =>
+    val base = knnGraphOldStored(s0, dir)
+    val path = base.path + "_ingmut"
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(s0.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    copyDirLocal(base.path, path)
+    val idx = base.copy(path = path)
+    val s = streamSession(s0)
+    val e0 = s.read.parquet(s"$dir/embeddings.parquet")
+    val stream = s.readStream.schema(e0.schema)
+      .parquet(streamDir(dir, "embeddings"))
+      .where(pmod(col("vec_id"), lit(5L)) === 4)
+      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val old = s.read.parquet(s"$dir/embeddings.parquet")
+      .where(pmod(col("vec_id"), lit(5L)) =!= 4)
+      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val q = graft.streaming.StreamingOps.streamingKnnGraphIngest(stream, idx, old)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    ckptRoots.add(java.nio.file.Paths.get(path))
+    ckptHook
+    idx
+  }
 
   private def qStreamKnnIngest(s0: SparkSession, dir: String): DataFrame =
     graft.operators.Similarity.knnGraphReadEdges(s0, streamKnnIngestStored(s0, dir))
@@ -2974,9 +2767,8 @@ object SparkEntry {
   }
 
   /** One-time build of every persisted composed-IVF×PQ artifact the
-    * q234-family queries serve against — memoized per (session, sf
-    * dir) and priced explicitly in [[buildCaches]] (emitted as
-    * build_s), so the nine index queries measure steady-state SERVE
+    * q234-family queries serve against, a [[Memo]], so the nine index
+    * queries measure steady-state SERVE
     * cost instead of each paying a ~1-2s in-query build per bench rep
     * (a production serve pays only serve; the one-time build is the
     * ingest pipeline's cost). Lazily built on first use, so Verify —
@@ -3001,62 +2793,83 @@ object SparkEntry {
       residual: Similarity.IvfPqIndex,
       rawTrained: Similarity.IvfPqIndex)
 
-  @transient private var ivfPqSuiteCache: (SparkSession, String, IvfPqSuite) = null
-
-  private def ivfPqSuite(s: SparkSession, dir: String): IvfPqSuite = synchronized {
-    if (ivfPqSuiteCache != null && (ivfPqSuiteCache._1 eq s)
-        && ivfPqSuiteCache._2 == dir) ivfPqSuiteCache._3
-    else {
-      import graft.operators.{Clustering, Similarity}
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      val cents = e.where(col("id") < 8)
-        .select(col("id").as("cent_id"), col("vec").as("cent_v"))
-      val model = Clustering.pqTrain(e, col("id"), col("vec"), m = 4, k = 8, iters = 1)
-      val digest = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-      def pathOf(tag: String) = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), s"graft_ivfpq_$tag", digest).toString
-      // six stores, FOUR distinct builds: the "del" store's build
-      // inputs are identical to "full"'s and "cmp"'s to "app"'s, so
-      // those two start as FILE COPIES of their just-written twins
-      // (the hier-mut pattern — ~ms per copy vs a full corpus
-      // encode+write each) taken BEFORE any mutation touches either
-      // path; the lifecycle ops then rewrite only their touched
-      // buckets in the copy. Content is identical by construction
-      // (same build inputs → same store), so every downstream oracle
-      // sees exactly what a second build produced.
-      def freshCopy(src: String, dst: String): Unit = {
-        val fs = new org.apache.hadoop.fs.Path(dst)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(dst), true)
-        copyDirLocal(src, dst)
-      }
-      val full = Similarity.ivfPqWritePartitioned(e, cents, model, pathOf("full"))
-      freshCopy(pathOf("full"), pathOf("del"))
-      val base = e.where(pmod(col("id"), lit(4L)) =!= 3)
-      val batch = e.where(pmod(col("id"), lit(4L)) === 3)
-      val appBase = Similarity.ivfPqWritePartitioned(base, cents, model, pathOf("app"))
-      freshCopy(pathOf("app"), pathOf("cmp"))
-      val appended = Similarity.ivfPqAppend(appBase, batch)
-      val compacted = Similarity.ivfPqCompact(s, Similarity.ivfPqAppend(
-        appBase.copy(path = pathOf("cmp")), batch))
-      val deleted = Similarity.ivfPqDelete(s, full.copy(path = pathOf("del")),
-        e.where(pmod(col("id"), lit(7L)) === 2).select(col("id")))
-      val trainedCents = trainedIvfCents(s, dir)
-      val resid = Similarity.ivfResiduals(e, trainedCents).persist()
-      val residModel = Clustering.pqTrain(
-        resid, col("id"), col("vec"), m = 4, k = 8, iters = 1)
-      resid.unpersist()
-      val residual = Similarity.ivfPqWritePartitioned(
-        e, trainedCents, residModel, pathOf("res"), residual = true)
-      val rawTrained = Similarity.ivfPqWritePartitioned(
-        e, trainedCents, model, pathOf("rawt"))
-      val built = IvfPqSuite(cents, model, full, appended, compacted, deleted,
-        trainedCents, residual, rawTrained)
-      ivfPqSuiteCache = (s, dir, built)
-      built
+  private val ivfPqSuite = memos("ivf_pq_suite") { (s, dir) =>
+    import graft.operators.{Clustering, Similarity}
+    val e = t(s, dir, "embeddings")
+      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val cents = e.where(col("id") < 8)
+      .select(col("id").as("cent_id"), col("vec").as("cent_v"))
+    val model = Clustering.pqTrain(e, col("id"), col("vec"), m = 4, k = 8, iters = 1)
+    val digest = tag(dir)
+    def pathOf(tag: String) = java.nio.file.Paths.get(
+      System.getProperty("java.io.tmpdir"), s"graft_ivfpq_$tag", digest).toString
+    // six stores, FOUR distinct builds: the "del" store's build
+    // inputs are identical to "full"'s and "cmp"'s to "app"'s, so
+    // those two start as FILE COPIES of their just-written twins
+    // (the hier-mut pattern — ~ms per copy vs a full corpus
+    // encode+write each) taken BEFORE any mutation touches either
+    // path; the lifecycle ops then rewrite only their touched
+    // buckets in the copy. Content is identical by construction
+    // (same build inputs → same store), so every downstream oracle
+    // sees exactly what a second build produced.
+    def freshCopy(src: String, dst: String): Unit = {
+      val fs = new org.apache.hadoop.fs.Path(dst)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
+      fs.delete(new org.apache.hadoop.fs.Path(dst), true)
+      copyDirLocal(src, dst)
     }
+    val full = Similarity.ivfPqWritePartitioned(e, cents, model, pathOf("full"))
+    freshCopy(pathOf("full"), pathOf("del"))
+    val base = e.where(pmod(col("id"), lit(4L)) =!= 3)
+    val batch = e.where(pmod(col("id"), lit(4L)) === 3)
+    val appBase = Similarity.ivfPqWritePartitioned(base, cents, model, pathOf("app"))
+    freshCopy(pathOf("app"), pathOf("cmp"))
+    val appended = Similarity.ivfPqAppend(appBase, batch)
+    val compacted = Similarity.ivfPqCompact(s, Similarity.ivfPqAppend(
+      appBase.copy(path = pathOf("cmp")), batch))
+    val deleted = Similarity.ivfPqDelete(s, full.copy(path = pathOf("del")),
+      e.where(pmod(col("id"), lit(7L)) === 2).select(col("id")))
+    val trainedCents = trainedIvfCents(s, dir)
+    val resid = Similarity.ivfResiduals(e, trainedCents).persist()
+    val residModel = Clustering.pqTrain(
+      resid, col("id"), col("vec"), m = 4, k = 8, iters = 1)
+    resid.unpersist()
+    val residual = Similarity.ivfPqWritePartitioned(
+      e, trainedCents, residModel, pathOf("res"), residual = true)
+    val rawTrained = Similarity.ivfPqWritePartitioned(
+      e, trainedCents, model, pathOf("rawt"))
+    IvfPqSuite(cents, model, full, appended, compacted, deleted,
+      trainedCents, residual, rawTrained)
+  }
+
+  /** The stream-drained IVF×PQ store behind [[qStreamIvfPqIngest]]:
+    * built over 3/4 of the corpus with [[ivfPqSuite]]'s codebook, the
+    * last 1/4 appended by the AvailableNow ingest drain.
+    */
+  private val streamIvfIngestStored = memos("stream_ivf_ingest") { (s0, dir) =>
+    val suite = ivfPqSuite(s0, dir)
+    val s = streamSession(s0)
+    val e0 = s.read.parquet(s"$dir/embeddings.parquet")
+    val e = e0.select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+      "graft_ivfpq_ingest",
+      s"${tag(dir)}_${ProcessHandle.current().pid()}").toString
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(s0.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    val idx0 = graft.operators.Similarity.ivfPqWritePartitioned(
+      e.where(pmod(col("id"), lit(4L)) =!= 3), suite.cents, suite.model, path)
+    val batchStream = s.readStream.schema(e0.schema)
+      .parquet(streamDir(dir, "embeddings"))
+      .where(pmod(col("vec_id"), lit(4L)) === 3)
+      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val q = graft.streaming.StreamingOps.streamingIvfPqIngest(batchStream, idx0)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    ckptRoots.add(java.nio.file.Paths.get(path))
+    ckptHook
+    idx0
   }
 
   /** Delete leg of the composed IVF×PQ lifecycle: build over the full
@@ -3797,33 +3610,19 @@ object SparkEntry {
   /** Warehouse table for the persisted bucketed posting list — same
     * per-dir derivation (and race rationale) as [[ivfBucketedTable]].
     */
-  private def invertedIndexTable(dir: String): String =
-    "graft_inv_postings_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+  private def invertedIndexTable(dir: String): String = "graft_inv_postings_" + tag(dir, 4)
 
-  // build-once cache: the bucketed posting table is the persisted
-  // index — build once / serve many, like the IVF index (and priced
-  // separately by buildCaches so q157 reps measure the SERVE)
-  @transient private var invertedIndexCache:
-    (SparkSession, String, graft.operators.Retrieval.InvertedIndex) = null
-
-  private def invertedIndexBucketed(
-      s: SparkSession, dir: String): graft.operators.Retrieval.InvertedIndex =
-    synchronized {
-      if (invertedIndexCache != null && (invertedIndexCache._1 eq s)
-          && invertedIndexCache._2 == dir)
-        invertedIndexCache._3
-      else {
-        val index = graft.operators.Retrieval.buildInvertedIndex(
-          t(s, dir, "documents"), col("doc_id"), col("text"), nBuckets = 8)
-        val tbl = invertedIndexTable(dir)
-        graft.operators.Scale.writeBucketedSorted(index.postings, tbl, "bucket", 8,
-          "bucket", "term")
-        val built = index.copy(postings = s.table(tbl))
-        invertedIndexCache = (s, dir, built)
-        built
-      }
-    }
+  // a Memo: the bucketed posting table is the persisted index —
+  // build once / serve many, like the IVF index, so q157 reps measure
+  // the SERVE
+  private val invertedIndexBucketed = memos("inverted_index") { (s, dir) =>
+    val index = graft.operators.Retrieval.buildInvertedIndex(
+      t(s, dir, "documents"), col("doc_id"), col("text"), nBuckets = 8)
+    val tbl = invertedIndexTable(dir)
+    graft.operators.Scale.writeBucketedSorted(index.postings, tbl, "bucket", 8,
+      "bucket", "term")
+    index.copy(postings = s.table(tbl))
+  }
 
   /** The q151 query batch — shared verbatim by every serve path that
     * must reproduce it (q151 scan, q157 indexed, q159 appended).
@@ -3930,30 +3729,16 @@ object SparkEntry {
   /** Warehouse table for the persisted bucketed POSITIONAL postings
     * (q158's serve source) — same derivation as [[invertedIndexTable]].
     */
-  private def posIndexTable(dir: String): String =
-    "graft_pos_postings_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+  private def posIndexTable(dir: String): String = "graft_pos_postings_" + tag(dir, 4)
 
-  @transient private var posIndexCache:
-    (SparkSession, String, graft.operators.Retrieval.PositionalIndex) = null
-
-  private def posIndexBucketed(
-      s: SparkSession, dir: String): graft.operators.Retrieval.PositionalIndex =
-    synchronized {
-      if (posIndexCache != null && (posIndexCache._1 eq s)
-          && posIndexCache._2 == dir)
-        posIndexCache._3
-      else {
-        val index = graft.operators.Retrieval.buildPositionalIndex(
-          t(s, dir, "documents"), col("doc_id"), col("text"), nBuckets = 8)
-        val tbl = posIndexTable(dir)
-        graft.operators.Scale.writeBucketedSorted(index.postings, tbl, "bucket", 8,
-          "bucket", "term")
-        val built = index.copy(postings = s.table(tbl))
-        posIndexCache = (s, dir, built)
-        built
-      }
-    }
+  private val posIndexBucketed = memos("pos_index") { (s, dir) =>
+    val index = graft.operators.Retrieval.buildPositionalIndex(
+      t(s, dir, "documents"), col("doc_id"), col("text"), nBuckets = 8)
+    val tbl = posIndexTable(dir)
+    graft.operators.Scale.writeBucketedSorted(index.postings, tbl, "bucket", 8,
+      "bucket", "term")
+    index.copy(postings = s.table(tbl))
+  }
 
   /** Exact phrase search against the persisted positional index:
     * top-10 docs per phrase by consecutive-occurrence count. The
@@ -4193,8 +3978,7 @@ object SparkEntry {
     * post-compaction serve bucket-prunes like a fresh build.
     *
     * The compacted postings table behind q170 — the build-¾ →
-    * append-¼ → compact rewrite, run ONCE per (session, sf dir) and
-    * priced in [[buildCaches]] as "index_compact" (the r15 lifecycle
+    * append-¼ → compact rewrite, a [[Memo]] (the r15 lifecycle
     * rule: a production compaction rewrites the durable table once
     * per maintenance cycle, and every consumer thereafter pays only
     * the serve; per-rep re-compaction priced the table write 2× per
@@ -4202,28 +3986,17 @@ object SparkEntry {
     * append/delete legs, so the postings family still has per-rep
     * mutation costs on the board.
     */
-  @transient private var indexCompactCache:
-    (SparkSession, String, graft.operators.Retrieval.InvertedIndex) = null
-
-  private def indexCompacted(
-      s: SparkSession, dir: String): graft.operators.Retrieval.InvertedIndex =
-    synchronized {
-      if (indexCompactCache != null && (indexCompactCache._1 eq s)
-          && indexCompactCache._2 == dir) indexCompactCache._3
-      else {
-        val docs = t(s, dir, "documents")
-        val base = graft.operators.Retrieval.buildInvertedIndex(
-          docs.where(pmod(col("doc_id"), lit(4)) =!= 0),
-          col("doc_id"), col("text"), nBuckets = 8)
-        val appended = graft.operators.Retrieval.appendToInvertedIndex(
-          base, docs.where(pmod(col("doc_id"), lit(4)) === 0),
-          col("doc_id"), col("text"))
-        val compacted = graft.operators.Retrieval.compactInvertedIndex(
-          appended, invertedIndexTable(dir) + "_compact")
-        indexCompactCache = (s, dir, compacted)
-        compacted
-      }
-    }
+  private val indexCompacted = memos("index_compact") { (s, dir) =>
+    val docs = t(s, dir, "documents")
+    val base = graft.operators.Retrieval.buildInvertedIndex(
+      docs.where(pmod(col("doc_id"), lit(4)) =!= 0),
+      col("doc_id"), col("text"), nBuckets = 8)
+    val appended = graft.operators.Retrieval.appendToInvertedIndex(
+      base, docs.where(pmod(col("doc_id"), lit(4)) === 0),
+      col("doc_id"), col("text"))
+    graft.operators.Retrieval.compactInvertedIndex(
+      appended, invertedIndexTable(dir) + "_compact")
+  }
 
   private def qIndexCompact(s: SparkSession, dir: String): DataFrame =
     graft.operators.Retrieval.bm25IndexedTopK(
@@ -4403,11 +4176,9 @@ object SparkEntry {
     val d0 = s.read.parquet(s"$dir/documents.parquet")
     val stream = s.readStream.schema(d0.schema)
       .parquet(streamDir(dir, "documents"))
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
     val out = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
       "graft_stream_dsir",
-      s"${digest}_${ProcessHandle.current().pid()}").toString
+      s"${tag(dir)}_${ProcessHandle.current().pid()}").toString
     val fs = new org.apache.hadoop.fs.Path(out)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(out), true)
@@ -4433,10 +4204,8 @@ object SparkEntry {
     */
   private def qWarcRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
     val out = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft_warc_export", digest).toString
+      System.getProperty("java.io.tmpdir"), "graft_warc_export", tag(dir)).toString
     graft.sink.WarcArchive.write(docs, col("doc_id"),
       concat(lit("http://corpus.local/doc/"), col("doc_id")), col("text"),
       out, nShards = 4).collect()
@@ -4675,24 +4444,6 @@ object SparkEntry {
       .select("query_id", "neighbor_id", "cos")
   }
 
-  /** q26's IVF serve against the PERSISTED bucket-partitioned index
-    * (Scale.writeBucketed): the index build+write pays the one
-    * assignment shuffle up front, and the serve join then reads the
-    * corpus pre-bucketed by `bucket` — zero corpus bytes through an
-    * exchange at query time (the 100 TB serve shape; `PlanSpec` pins
-    * the exchange-free scan). Oracle: identical answers to q26.
-    */
-  // build-once cache: the bucketed table is the PERSISTED index — the
-  // operator contract is build once / serve many, so repeat calls in
-  // one session serve from the existing table (what production does)
-  // instead of re-running k-means + the bucketed write per query batch
-  @transient private var ivfBucketedCache: (SparkSession, String, Similarity.IvfIndex) = null
-
-  /** Build (or fetch) the persisted bucketed IVF index — the one-time
-    * "index build" side of the build-once/serve-many contract. Shared
-    * by q67 and [[buildCaches]] so Bench can price the build
-    * explicitly instead of the first q67 rep absorbing it.
-    */
   /** Warehouse table holding the bucketed IVF-assigned corpus for a
     * given sf dir. Name derived from the dir so two processes sharing
     * a warehouse (e.g. Verify and Bench side by side) each overwrite
@@ -4701,26 +4452,30 @@ object SparkEntry {
     * (an invalid identifier) and 32-bit collisions would silently
     * bring the race back.
     */
-  private def ivfBucketedTable(dir: String): String =
-    "graft_ivf_assigned_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+  private def ivfBucketedTable(dir: String): String = "graft_ivf_assigned_" + tag(dir, 4)
 
-  private def ivfBucketedIndex(s: SparkSession, dir: String): Similarity.IvfIndex =
-    synchronized {
-      if (ivfBucketedCache != null && (ivfBucketedCache._1 eq s) && ivfBucketedCache._2 == dir)
-        ivfBucketedCache._3
-      else {
-        val e = t(s, dir, "embeddings")
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val index = Similarity.ivfIndex(e, nBuckets = 8)
-        val tbl = ivfBucketedTable(dir)
-        graft.operators.Scale.writeBucketed(index.assigned, tbl, "bucket", 8)
-        val built = Similarity.IvfIndex(index.cents, s.table(tbl))
-        ivfBucketedCache = (s, dir, built)
-        built
-      }
-    }
+  /** The persisted bucketed IVF index, a [[Memo]]: the bucketed table
+    * IS the index — the operator contract is build once / serve many,
+    * so repeat calls serve from the existing table (what production
+    * does) instead of re-running k-means + the bucketed write per
+    * query batch.
+    */
+  private val ivfBucketedIndex = memos("ivf_bucketed") { (s, dir) =>
+    val e = t(s, dir, "embeddings")
+      .select(col("vec_id").as("id"), col("embedding").as("vec"))
+    val index = Similarity.ivfIndex(e, nBuckets = 8)
+    val tbl = ivfBucketedTable(dir)
+    graft.operators.Scale.writeBucketed(index.assigned, tbl, "bucket", 8)
+    Similarity.IvfIndex(index.cents, s.table(tbl))
+  }
 
+  /** q26's IVF serve against the PERSISTED bucket-partitioned index
+    * (Scale.writeBucketed): the index build+write pays the one
+    * assignment shuffle up front, and the serve join then reads the
+    * corpus pre-bucketed by `bucket` — zero corpus bytes through an
+    * exchange at query time (the 100 TB serve shape; `PlanSpec` pins
+    * the exchange-free scan). Oracle: identical answers to q26.
+    */
   private def qIvfServeBucketed(s: SparkSession, dir: String): DataFrame = {
     val served = ivfBucketedIndex(s, dir)
     val e = t(s, dir, "embeddings")
@@ -4965,7 +4720,7 @@ object SparkEntry {
   }
 
   // fixture tables are tiny but the pipeline runs several jobs; five
-  // queries share them, so memoize per session — including the raw
+  // queries share them, so they are a [[Memo]] — including the raw
   // parsed records, so q42 (type annotation) doesn't re-run the parse
   private final class XmlTables(
       val records: DataFrame,
@@ -4976,19 +4731,11 @@ object SparkEntry {
     // job; the other XML queries never touch it
     lazy val nRecords: Long = nRecordsThunk()
   }
-  @transient private var xmlTablesCache: (SparkSession, XmlTables) = null
 
-  /** Parse + flatten + assign global ids: the S2/S3/P1/P2/A1/K1 chain. */
-  private def xmlTables(s: SparkSession): XmlTables = synchronized {
-    if (xmlTablesCache != null && (xmlTablesCache._1 eq s)) xmlTablesCache._2
-    else {
-      val built = buildXmlTables(s)
-      xmlTablesCache = (s, built)
-      built
-    }
-  }
-
-  private def buildXmlTables(s: SparkSession): XmlTables = {
+  /** Parse + flatten + assign global ids: the S2/S3/P1/P2/A1/K1 chain
+    * over the built-in fixture (`dir` is not read).
+    */
+  private val xmlTables = memos("xml_tables") { (s, _) =>
     val (xmlPath, dtd) = xmlFixture()
     val records = XmlRecords.readRows(s, xmlPath, dtd).persist()
     // materialize the cache BEFORE the per-type union consumers — two
@@ -5012,17 +4759,17 @@ object SparkEntry {
   }
 
   private def qXmlFlatten(s: SparkSession, dir: String): DataFrame =
-    xmlTables(s).withIds("article").orderBy("id")
+    xmlTables(s, dir).withIds("article").orderBy("id")
 
   private def qXmlSchema(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    xmlTables(s).schema.toSeq.flatMap { case (t, cs) => cs.map(c => (t, c)) }
+    xmlTables(s, dir).schema.toSeq.flatMap { case (t, cs) => cs.map(c => (t, c)) }
       .toDF("record_type", "col_name").orderBy("record_type", "col_name")
   }
 
   private def qXmlTypes(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tables = xmlTables(s)
+    val tables = xmlTables(s, dir)
     val meta = Annotate.columnMeta(Flatten.explodedValues(tables.records, tables.schema))
     meta.toSeq.map { case ((t, c), m) => (t, c, m.unifiedType, m.isArray) }
       .toDF("record_type", "col_name", "unified_type", "is_array")
@@ -5030,13 +4777,13 @@ object SparkEntry {
   }
 
   private def qXmlIds(s: SparkSession, dir: String): DataFrame = {
-    val tables = xmlTables(s).withIds
+    val tables = xmlTables(s, dir).withIds
     tables.toSeq.map { case (t, df) => df.select(col("id"), lit(t).as("record_type"), col("key")) }
       .reduce(_ unionAll _).orderBy("id")
   }
 
   private def qXmlRelations(s: SparkSession, dir: String): DataFrame = {
-    val xt = xmlTables(s)
+    val xt = xmlTables(s, dir)
     val article = xt.withIds("article")
     val pairs = Relational.relationPairs(article,
       col("id"), explode_outer(split(col("author"), "\\|")))
@@ -5176,9 +4923,7 @@ object SparkEntry {
     // (bounded well under NAME_MAX) plus the full path's md5 — no
     // silent collision between sf dirs, no over-long path component
     val parent = src.getParent.toString
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(parent.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val safe = parent.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(80) + "_" + digest
+    val safe = parent.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(80) + "_" + tag(parent)
     val d = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
       "graft_stream_src", safe, table)
     java.nio.file.Files.createDirectories(d)
@@ -5271,10 +5016,8 @@ object SparkEntry {
     */
   private def sessStagedFile(s: SparkSession, dir: String, gapUs: Long): (String, Long) = {
     val src = java.nio.file.Paths.get(dir, "events.parquet").toAbsolutePath
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(src.toString.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
     val d = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_stream_sess", digest)
+      "graft_stream_sess", tag(src.toString))
     java.nio.file.Files.createDirectories(d)
     val f = d.resolve("sess.parquet")
     // staleness guard: unlike streamDir's SYMLINK (always-current), this
@@ -5533,76 +5276,44 @@ object SparkEntry {
       .orderBy("id_a", "id_b")
   }
 
-  // memoized per session like xmlTables — the builder runs several
-  // tiny jobs (detection + fallback parse + id assignment) that the
-  // bench would otherwise re-pay per rep
-  @transient private var anyLayoutCache: (SparkSession, DataFrame) = null
-
-  private def qXmlAnyLayout(s: SparkSession, dir: String): DataFrame = synchronized {
-    if (anyLayoutCache != null && (anyLayoutCache._1 eq s)) anyLayoutCache._2
-    else {
-      val dirp = java.nio.file.Paths.get("/tmp/graft_xml_fixture")
-      java.nio.file.Files.createDirectories(dirp)
-      val xml = dirp.resolve("mini_oneline.xml")
-      java.nio.file.Files.write(xml, fixtureXml.replace("\n", "").getBytes("UTF-8"))
-      val dtd = Dtd.parseString(fixtureDtd)
-      val records = XmlRecords.readRows(s, xml.toString, dtd, layout = "auto")
-      val schema = Flatten.inferColumns(
-        records.as[graft.xml.XmlRecord](org.apache.spark.sql.Encoders.product[graft.xml.XmlRecord]), dtd)
-      val flat = schema.map { case (t, cs) => t -> Flatten.flattenType(records, t, cs) }
-      val idMap = Relational.withContiguousId(
-        flat.values.map(_.select(col("pos"))).reduce(_ unionAll _).orderBy("pos"), "id")
-      val result = flat("article").join(idMap, "pos")
-        .select((col("id") +: schema("article").map(col)): _*).orderBy("id")
-      anyLayoutCache = (s, result)
-      result
-    }
+  // a Memo like xmlTables — the builder runs several tiny jobs
+  // (detection + fallback parse + id assignment) that the bench would
+  // otherwise re-pay per rep; `dir` is not read
+  private val anyLayout = memos("xml_anylayout") { (s, _) =>
+    val dirp = java.nio.file.Paths.get("/tmp/graft_xml_fixture")
+    java.nio.file.Files.createDirectories(dirp)
+    val xml = dirp.resolve("mini_oneline.xml")
+    java.nio.file.Files.write(xml, fixtureXml.replace("\n", "").getBytes("UTF-8"))
+    val dtd = Dtd.parseString(fixtureDtd)
+    val records = XmlRecords.readRows(s, xml.toString, dtd, layout = "auto")
+    val schema = Flatten.inferColumns(
+      records.as[graft.xml.XmlRecord](org.apache.spark.sql.Encoders.product[graft.xml.XmlRecord]), dtd)
+    val flat = schema.map { case (t, cs) => t -> Flatten.flattenType(records, t, cs) }
+    val idMap = Relational.withContiguousId(
+      flat.values.map(_.select(col("pos"))).reduce(_ unionAll _).orderBy("pos"), "id")
+    flat("article").join(idMap, "pos")
+      .select((col("id") +: schema("article").map(col)): _*).orderBy("id")
   }
+
+  private def qXmlAnyLayout(s: SparkSession, dir: String): DataFrame = anyLayout(s, dir)
 
   // ---------------------------------------------------------------- //
 
-  /** Eagerly build the session-memoized one-time caches that several
-    * queries share — the XML parse+flatten tables (q40–q44), the
-    * layout=auto plan (q57), and the persisted bucketed IVF index
-    * (q67) — returning (name, build seconds) in build order. Bench
-    * calls this before the timed reps and emits the costs as explicit
-    * `build_s` entries, so per-query timings measure steady-state
-    * execution instead of whichever query touches a cache first
-    * absorbing its build (the BASELINE.md protocol caveat, now data).
-    * Callers that skip it lose nothing: every cache still builds
-    * lazily on first touch.
+  /** Eagerly build every [[Memo]] in [[memos]] — the one-time
+    * artifacts that several queries share — returning (name, build
+    * seconds) in build order. Bench calls this before the timed reps
+    * and emits the costs as explicit `build_s` entries, so per-query
+    * timings measure steady-state execution instead of whichever
+    * query touches an artifact first absorbing its build (the
+    * BASELINE.md protocol caveat, now data). Callers that skip it
+    * lose nothing: every memo still builds lazily on first touch.
     */
-  def buildCaches(s: SparkSession, dir: String): Seq[(String, Double)] = {
-    def timed(f: => Any): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+  def buildCaches(s: SparkSession, dir: String): Seq[(String, Double)] =
+    memos.all.map { m =>
+      val t0 = System.nanoTime()
+      m(s, dir)
+      m.name -> (System.nanoTime() - t0) / 1e9
     }
-    Seq(
-      "xml_tables" -> timed(xmlTables(s)),
-      "xml_anylayout" -> timed(qXmlAnyLayout(s, dir)),
-      "ivf_bucketed" -> timed(ivfBucketedIndex(s, dir)),
-      "ivf_pq_suite" -> timed(ivfPqSuite(s, dir)),
-      "knn_graph" -> timed(knnGraph(s, dir)),
-      "knn_graph_old" -> timed(knnGraphOld(s, dir)),
-      "knn_graph_l1" -> timed(knnGraphL1(s, dir)),
-      "knn_graph_store" -> timed(knnGraphStored(s, dir)),
-      "knn_graph_old_store" -> timed(knnGraphOldStored(s, dir)),
-      "knn_graph_old_l1" -> timed(knnGraphOldL1(s, dir)),
-      "knn_graph_hier_store" -> timed(knnGraphOldHierStored(s, dir)),
-      "knn_graph_hier_mut" -> timed(knnGraphHierMutStored(s, dir)),
-      "knn_graph_flat_mut" -> timed(knnGraphFlatMutStored(s, dir)),
-      "knn_graph_del_mut" -> timed(knnGraphDelMutStored(s, dir)),
-      "knn_graph_refresh" -> timed(knnGraphRefreshStored(s, dir)),
-      "stream_knn_ingest" -> timed(streamKnnIngestStored(s, dir)),
-      "stream_ivf_ingest" -> timed(streamIvfIngestStored(s, dir)),
-      "perceptron_model" -> timed(perceptronModel(s, dir)),
-      "wordpiece_fert" -> timed(wordpieceFert(s, dir)),
-      "inverted_index" -> timed(invertedIndexBucketed(s, dir)),
-      "index_compact" -> timed(indexCompacted(s, dir)),
-      "pos_index" -> timed(posIndexBucketed(s, dir)),
-      "co_ship_pairs" -> timed(supplierPairs(s, dir)),
-      "event_user_pairs" -> timed(eventUserPairs(s, dir)),
-      "pref_comparisons" -> timed(supplierComparisons(s, dir)))
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q40_xml_flatten" -> qXmlFlatten _,

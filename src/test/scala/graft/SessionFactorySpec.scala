@@ -17,6 +17,9 @@ class SessionFactorySpec extends AnyFunSuite {
   // split literals, so this file does not match its own needles
   private val builder = "SparkSession" + ".builder"
   private val register = "register" + "Function"
+  private val slot = "@transient private " + "var"
+  private val lock = "synchron" + "ized"
+  private val entry = Paths.get("src/main/scala/graft/SparkEntry.scala")
 
   private def sources: Seq[(Path, String)] = {
     val walk = Files.walk(Paths.get("src"))
@@ -35,5 +38,12 @@ class SessionFactorySpec extends AnyFunSuite {
   test("no code writes into a session's function registry") {
     val hits = sources.collect { case (p, src) if src.contains(register) => p }
     assert(hits.isEmpty, s"inject functions through GraftExtensions instead: ${hits.mkString(", ")}")
+  }
+
+  test("SparkEntry shares artifacts through Memo, not hand-rolled locked slots") {
+    val src = sources.collectFirst { case (p, src) if p == entry => src }
+    assert(src.isDefined, s"SparkEntry not found at $entry")
+    val hits = Seq(slot, lock).filter(src.get.contains)
+    assert(hits.isEmpty, s"declare shared artifacts as a graft.Memo: found ${hits.mkString(", ")}")
   }
 }

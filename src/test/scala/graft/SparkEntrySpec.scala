@@ -1,5 +1,11 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
@@ -13,6 +19,94 @@ import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 class SparkEntrySpec extends SparkTestBase {
 
   private val epochUs = 1700000000000000L // 2023-11-14T22:13:20Z, micros
+
+  /** The `build_s` keys Bench emits, one per shared artifact. */
+  private val artifactNames = Seq(
+    "xml_tables", "xml_anylayout", "ivf_bucketed", "ivf_pq_suite",
+    "knn_graph", "knn_graph_old", "knn_graph_l1", "knn_graph_store",
+    "knn_graph_old_store", "knn_graph_old_l1", "knn_graph_hier_store",
+    "knn_graph_hier_mut", "knn_graph_flat_mut", "knn_graph_del_mut",
+    "knn_graph_refresh", "stream_knn_ingest", "stream_ivf_ingest",
+    "perceptron_model", "wordpiece_fert", "inverted_index", "index_compact",
+    "pos_index", "co_ship_pairs", "event_user_pairs", "pref_comparisons")
+
+  /** Artifact -> the artifacts its build calls. */
+  private val buildsWith = Map(
+    "knn_graph_store" -> Seq("knn_graph", "knn_graph_l1"),
+    "knn_graph_old_store" -> Seq("knn_graph_old"),
+    "knn_graph_flat_mut" -> Seq("knn_graph_old_store"),
+    "knn_graph_refresh" -> Seq("knn_graph_flat_mut"),
+    "knn_graph_del_mut" -> Seq("knn_graph_store"),
+    "knn_graph_hier_store" -> Seq("knn_graph_old", "knn_graph_old_l1"),
+    "knn_graph_hier_mut" -> Seq("knn_graph_hier_store"),
+    "stream_knn_ingest" -> Seq("knn_graph_old_store"),
+    "stream_ivf_ingest" -> Seq("ivf_pq_suite"))
+
+  private def withPool[A](threads: Int)(body: ExecutionContext => A): A = {
+    val pool = Executors.newFixedThreadPool(threads)
+    try body(ExecutionContext.fromExecutorService(pool))
+    finally pool.shutdownNow()
+  }
+
+  test("Memo: concurrent first calls run the build once and share its value") {
+    val builds = new AtomicInteger(0)
+    val m = new Memo.Registry().apply("m") { (_, _) =>
+      builds.incrementAndGet()
+      Thread.sleep(50)
+      new Object
+    }
+    withPool(8) { implicit ec =>
+      val start = new CountDownLatch(1)
+      val calls = Seq.fill(8)(Future { start.await(); m(spark, "d") })
+      start.countDown()
+      val got = Await.result(Future.sequence(calls), 30.seconds)
+      assert(builds.get == 1)
+      assert(got.forall(_ eq got.head))
+    }
+  }
+
+  test("Memo: a built memo serves while another memo's build is in flight") {
+    val reg = new Memo.Registry
+    val built = reg("built") { (_, _) => "b" }
+    assert(built(spark, "d") == "b")
+    val entered = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val slow = reg("slow") { (_, _) => entered.countDown(); release.await(); "a" }
+    withPool(2) { implicit ec =>
+      val a = Future(slow(spark, "d"))
+      try {
+        assert(entered.await(10, TimeUnit.SECONDS))
+        assert(Await.result(Future(built(spark, "d")), 5.seconds) == "b")
+      } finally release.countDown()
+      assert(Await.result(a, 10.seconds) == "a")
+    }
+  }
+
+  test("Memo: a build may call another memo") {
+    val reg = new Memo.Registry
+    val inner = reg("inner") { (_, dir) => s"inner:$dir" }
+    val outer = reg("outer") { (s, dir) => inner(s, dir) + "+outer" }
+    assert(outer(spark, "d") == "inner:d+outer")
+    assert(reg.all.map(_.name) == Seq("inner", "outer"))
+  }
+
+  test("Memo: a different session or dir rebuilds") {
+    val builds = new AtomicInteger(0)
+    val m = new Memo.Registry().apply("m") { (_, dir) => builds.incrementAndGet(); dir }
+    val child = spark.newSession()
+    m(spark, "d1"); m(spark, "d1")
+    assert(builds.get == 1)
+    m(spark, "d2")
+    assert(builds.get == 2)
+    m(child, "d2"); m(child, "d2")
+    assert(builds.get == 3)
+  }
+
+  test("every query has an oracle and every oracle a query") {
+    val q = SparkEntry.queries.keySet
+    val o = SparkEntry.oracleSql.keySet
+    assert(q == o, s"no oracle: ${(q -- o).toSeq.sorted}; no query: ${(o -- q).toSeq.sorted}")
+  }
 
   test("normalizeTsNanos: NTZ, TIMESTAMP, and long vintages all land on the same epoch nanos") {
     import spark.implicits._
@@ -69,9 +163,18 @@ class SparkEntrySpec extends SparkTestBase {
         stages.addAndGet(js.stageInfos.size)
       }
     }
+    val names = scala.collection.mutable.ArrayBuffer.empty[String]
     spark.sparkContext.addSparkListener(listener)
     try {
       SparkEntry.buildCaches(spark, "/root/testdata/sf0.001")
+        .foreach { case (name, _) => names += name }
+      assert(names.sorted == artifactNames.sorted)
+      assert(names.distinct == names)
+      assert(names.toSeq == SparkEntry.memos.all.map(_.name))
+      // each entry prices its own build: no artifact before one its
+      // build calls
+      for ((a, deps) <- buildsWith; d <- deps)
+        assert(names.indexOf(d) < names.indexOf(a), s"$a is built before $d")
       // listener events deliver async; wait until the job count is
       // stable for half a second (cap 10s)
       var last = -1
